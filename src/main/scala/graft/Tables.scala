@@ -17,29 +17,33 @@ object Tables {
     * schema runs a footer-inference Spark JOB at every DataFrame
     * construction — profiled at ~0.1 s per table reference, ×2-6 tables ×
     * every query on the bench wall (a production engine reads schemas
-    * from a catalog, not per-query footer jobs). Keyed by canonical path
-    * + mtime + size + the nanos legacy conf, so a fixture the driver
-    * regenerates IN PLACE misses the cache and re-infers (the
+    * from a catalog, not per-query footer jobs). Keyed by [[cacheKey]], so
+    * a fixture regenerated IN PLACE misses the cache and re-infers (the
     * events.ts-drift scenario the probe discipline exists for), and
-    * sessions with different nanos handling never share an entry. Values
-    * are schemas only — never data, never results. */
+    * sessions with different schema confs never share an entry.
+    * Values are schemas only — never data, never results. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
+  /** Canonical path + nanosecond mtime + size + every parquet conf that
+    * changes the schema a footer reads as: one stat and a few conf lookups,
+    * no listing or footer read. None for a path that can't be stat'ed; the
+    * caller then reads uncached. */
+  private def cacheKey(s: SparkSession, path: String): Option[String] = try {
+    val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    val attrs = java.nio.file.Files.readAttributes(
+      p, classOf[java.nio.file.attribute.BasicFileAttributes])
+    val confs = Seq("parquet.binaryAsString", "parquet.int96AsTimestamp",
+      "parquet.inferTimestampNTZ.enabled", "legacy.parquet.nanosAsLong")
+      .map(c => s.conf.getOption(s"spark.sql.$c").orNull)
+    val mtime = attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)
+    Some(s"$p@$mtime:${attrs.size}:${confs.mkString(",")}")
+  } catch { case _: Exception => None }
+
   private def cachedSchema(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
-    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key = try {
-      val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val attrs = java.nio.file.Files.readAttributes(
-        p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"$p@${attrs.lastModifiedTime.toMillis}:${attrs.size}:$nanos"
-    } catch { case _: Exception =>
-      // non-stat-able path (shouldn't happen for the local fixtures):
-      // fall through to an uncached inference
-      return spark.read.parquet(path).schema
-    }
-    schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    def infer() = spark.read.parquet(path).schema
+    cacheKey(spark, path).fold(infer())(k => schemaCache.computeIfAbsent(k, _ => infer()))
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
@@ -50,7 +54,7 @@ object Tables {
   /** Total row count straight from the parquet FOOTER(s) — driver-side
     * metadata, no Spark job (the footer stores per-row-group counts).
     * Used to SIZE things (streaming state partitions), never to answer
-    * queries. Same mtime+size cache key discipline as [[cachedSchema]]. */
+    * queries. Same [[cacheKey]] as [[cachedSchema]]. */
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -69,13 +73,8 @@ object Tables {
         try r.getRecordCount finally r.close()
       }.sum
     }
-    val key = try {
-      val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val attrs = java.nio.file.Files.readAttributes(
-        p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"$p@${attrs.lastModifiedTime.toMillis}:${attrs.size}"
-    } catch { case _: Exception => return footerCount() }
-    rowCountCache.computeIfAbsent(key, _ => footerCount()).longValue()
+    cacheKey(s, path).fold(footerCount())(
+      k => rowCountCache.computeIfAbsent(k, _ => footerCount()).longValue())
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

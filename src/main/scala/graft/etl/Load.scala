@@ -1,6 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.Fs.{listDir, parquetLeaves, rmTree}
 
 /** Load-stage sinks K1–K4 (SURVEY.md §2.2).
   *
@@ -23,109 +27,106 @@ object Load {
       .option("emptyValue", "\"\"")
       .csv(out)
 
-  /** Small-file compaction — the lake-maintenance pass: rewrite a parquet
-    * directory into `numFiles` right-sized files (a 100 TB table
-    * accumulating thousands of tiny per-batch files pays for it in
-    * open/list overhead on every scan). Writes beside the target and
-    * swaps, so a failure mid-compact leaves the original intact. */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              numFiles: Int): Unit = {
-    import java.nio.file.{Files, Paths}
-    import graft.util.Fs.rmTree
-    val tmp = Paths.get(dir + ".compacting")
-    val old = Paths.get(dir + ".precompact")
-    val target = Paths.get(dir)
-    // recover from a previously interrupted compact before starting a new
-    // one — a stale .precompact would otherwise wedge every future run
-    if (Files.exists(old) && !Files.exists(target)) Files.move(old, target)
-    else if (Files.exists(old)) rmTree(old)
-    rmTree(tmp)
-    spark.read.parquet(dir).repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // swap order keeps a complete copy live at every step: a crash before
-    // the second move leaves the original at `.precompact`, never nothing
-    Files.move(target, old)
-    Files.move(tmp, target)
-    rmTree(old)
+  /** Small-file compaction, per LEAF ([[graft.util.Fs.parquetLeaves]]:
+    * `dir` for a flat table, each `k=v[/k2=v2…]` directory of a Hive-layout
+    * one) with `numFiles` as the per-leaf budget. A leaf within budget is
+    * not touched: a driver-side listing decides, no Spark job, no file
+    * move. A leaf over budget is read with `mergeSchema` (no column of an
+    * evolved schema is lost) and rewritten into exactly `numFiles` files.
+    * Partition values stay in the directory names, so the layout, and
+    * directory pruning on a partition-key filter, survive. Each rewrite
+    * writes beside its leaf and swaps ([[swapIn]]); a call first repairs
+    * what an interrupted one staged. */
+  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
+    def recoverStaged(d: Path): Unit = listDir(d).map(_.getFileName.toString)
+      .foreach(n => staged.find(n.startsWith).foreach(p => recover(d.resolve(n.stripPrefix(p)))))
+    recover(Paths.get(dir))
+    parquetLeaves(Paths.get(dir), recoverStaged).foreach { case (leaf, files) =>
+      if (files.size > numFiles) swapIn(leaf) { tmp =>
+        spark.read.option("mergeSchema", "true").parquet(files.map(_.toString): _*)
+          .repartition(numFiles).write.parquet(tmp)
+      }
+    }
   }
 
-  /** File manifest of a hive-layout parquet directory, in the shape
-    * [[graft.operators.Layout.compactionPlan]] consumes — (part, file_id,
-    * file, bytes), `file_id` ordered by file name within each partition.
-    * Listing is metadata-sized work; at 100 TB this frame comes from the
-    * table format's manifest store rather than an FS walk — the SHAPE
-    * (one row per data file, keyed by partition) is the contract, and
-    * the plan over it stays a dataframe computation either way. */
-  def parquetManifest(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import graft.util.Fs.listDir
-    val rows = listDir(Paths.get(dir))
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
-      .sortBy(_.getFileName.toString)
-      .flatMap { pd =>
-        val part = pd.getFileName.toString
-        listDir(pd)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString).zipWithIndex
-          .map { case (f, i) => (part, i.toLong, f.toString, Files.size(f)) }
-      }
+  /** (part, file_id, file, bytes) manifest for
+    * [[graft.operators.Layout.compactionPlan]]: one row per data file of
+    * each leaf [[compact]] sees, `part` the leaf's path relative to `dir`
+    * (`a=1/b=2`; empty for a flat table), `file_id` by file name within the
+    * leaf. At 100 TB this frame comes from the table format's manifest
+    * store rather than an FS walk; the SHAPE is the contract. */
+  def parquetManifest(spark: SparkSession, dir: String): DataFrame = {
+    val root = Paths.get(dir)
+    val rows = parquetLeaves(root).flatMap { case (leaf, files) =>
+      val part = root.relativize(leaf).toString
+      files.zipWithIndex.map { case (f, i) => (part, i.toLong, f.toString, Files.size(f)) }
+    }
     import spark.implicits._
     rows.toDF("part", "file_id", "file", "bytes")
   }
 
   /** Execute ONE partition of a [[graft.operators.Layout.compactionPlan]]:
-    * every planned bin's files are rewritten as exactly one file, with
-    * [[compact]]'s write-beside-and-swap discipline (a crash at any step
-    * leaves a complete copy of the partition live). `plan` must carry
-    * (part, file, bin) — the planner output joined back to the manifest's
-    * file paths. The driver loop is over BINS of one partition — the
-    * rewrite-job orchestration unit (at scale each partition executes
-    * independently, one task tree per bin); nothing data-sized ever
-    * collects. Returns the achieved file count for the partition, which
-    * the caller asserts against the plan's bin count. */
-  def executeCompaction(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, part: String,
+    * each planned bin's files become exactly one file, through [[swapIn]].
+    * `plan` carries (part, file, bin), the planner output joined back to
+    * the manifest's paths. A driver-side loop runs over one partition's
+    * BINS (at scale, one task tree per bin); nothing data-sized is
+    * collected. Returns the achieved file count, for the caller to check. */
+  def executeCompaction(spark: SparkSession, dir: String, part: String,
                         plan: DataFrame): Int = {
-    import java.nio.file.{Files, Paths}
-    import graft.util.Fs.{listDir, rmTree}
     import org.apache.spark.sql.functions.col
     val bins = plan.filter(col("part") === part)
       .select(col("bin").cast("long"), col("file")).collect()
       .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      .map { case (bin, rs) => bin -> rs.map(_.getString(1)).sorted }
+      .map { case (bin, rs) => bin -> rs.map(_.getString(1)).sorted.toSeq }
     require(bins.nonEmpty, s"plan has no files for partition $part")
     val target = Paths.get(dir, part)
-    val tmp = Paths.get(dir, part + ".compacting")
-    val old = Paths.get(dir, part + ".precompact")
-    def achieved(): Int =
-      listDir(target).count(_.getFileName.toString.endsWith(".parquet"))
-    // interrupted-run recovery, same as compact: restore a stranded
-    // original before starting over. One extra state is reachable here
-    // that compact never sees: a crash AFTER the tmp→target swap but
-    // BEFORE rmTree(old) leaves target holding the compacted copy while
-    // the plan's source files are gone (they lived in the pre-swap
-    // target). Re-running the bins against those paths would fail
-    // midway — detect the completed swap, finish the cleanup, and
-    // report the achieved count instead.
-    if (Files.exists(old) && !Files.exists(target)) Files.move(old, target)
-    else if (Files.exists(old)) {
-      val planned = bins.flatMap(_._2)
-      if (planned.forall(f => !Files.exists(Paths.get(f)))) {
-        rmTree(old)
-        return achieved()
+    def achieved(): Int = listDir(target).count(_.getFileName.toString.endsWith(".parquet"))
+    // a crash after the swap but before its cleanup leaves target holding
+    // the compacted copy while the plan's source files are gone (they
+    // lived in the pre-swap target): re-running the bins against those
+    // paths would fail midway, so report the achieved count instead
+    if (recover(target) && bins.forall(_._2.forall(f => !Files.exists(Paths.get(f)))))
+      return achieved()
+    swapIn(target) { tmp =>
+      bins.foreach { case (_, files) =>
+        spark.read.option("mergeSchema", "true").parquet(files: _*).coalesce(1)
+          .write.mode("append").parquet(tmp)
       }
-      rmTree(old)
     }
+    achieved()
+  }
+
+  /** Staging-sibling prefixes (new copy, old copy) of a swap target: a
+    * leading `.` hides them from Spark's reader, so no reader sees a row
+    * twice mid-compaction (`_` would not: Spark keeps `_`-names with `=`). */
+  private val staged = Seq(".compacting-", ".precompact-")
+
+  private def staging(target: Path): (Path, Path) = {
+    val t = target.toAbsolutePath
+    (t.resolveSibling(staged(0) + t.getFileName), t.resolveSibling(staged(1) + t.getFileName))
+  }
+
+  /** Write-beside-and-swap, the one swap path of both compactions. The
+    * move order keeps a complete copy live at every step: a crash between
+    * the moves leaves the original at the old-copy sibling for [[recover]]. */
+  private def swapIn(target: Path)(write: String => Unit): Unit = {
+    val (tmp, old) = staging(target)
     rmTree(tmp)
-    bins.foreach { case (_, files) =>
-      spark.read.parquet(files: _*).coalesce(1)
-        .write.mode("append").parquet(tmp.toString)
-    }
+    write(tmp.toString)
     Files.move(target, old)
     Files.move(tmp, target)
     rmTree(old)
-    achieved()
+  }
+
+  /** Crash recovery for one swap target: drop a half-written new copy and
+    * restore a stranded original. True when the crash came after the swap
+    * (target and old copy both existed; the old copy is dropped). */
+  private def recover(target: Path): Boolean = {
+    val (tmp, old) = staging(target)
+    rmTree(tmp)
+    if (!Files.exists(old)) false
+    else if (!Files.exists(target)) { Files.move(old, target); false }
+    else { rmTree(old); true }
   }
 
   /** K1 — JSON sink (one object per line, the API envelope's rows). */

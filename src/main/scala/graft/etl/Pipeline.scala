@@ -50,23 +50,19 @@ class Pipeline(spark: SparkSession) {
   }
 
   /** Resolve observed row counts — call once AFTER the terminal action.
-    * Metrics arrive via an async listener, so poll briefly. The deadline is
-    * ONE shared budget across all pending stages (each stage is checked
-    * instantly first): a pipeline of N never-executed stages reports all N
-    * as 'unmeasured' after maxWaitMs total, not N × maxWaitMs of sleeps. A
-    * stage whose plan the action never executed reports -1 (visibly
-    * unmeasured, never silently recomputed). */
+    * Each stage waits on its observation's future (metrics arrive via an
+    * async listener), all under ONE shared deadline: N never-executed
+    * stages report -1 / 'unmeasured' after maxWaitMs total, not N ×
+    * maxWaitMs — visibly unmeasured, never silently recomputed. */
   def finish(maxWaitMs: Long = 10000): Seq[StageRun] = {
-    val deadline = System.currentTimeMillis() + maxWaitMs
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val deadline = System.nanoTime() + maxWaitMs * 1000000L
     pending.foreach { case (name, dt, obs) =>
-      def read(): Long =
-        org.apache.spark.sql.graftbridge.Bridge.observationMetrics(obs)
-          .get("rows").map(_.asInstanceOf[Long]).getOrElse(-1L)
-      var rows = read()
-      while (rows < 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(25)
-        rows = read()
-      }
+      val rows = try {
+        val left = math.max(0L, deadline - System.nanoTime()).nanos
+        Await.result(obs.future, left).getAs[Long]("rows")
+      } catch { case _: java.util.concurrent.TimeoutException => -1L }
       stages += StageRun(name, if (rows >= 0) "done" else "unmeasured", dt, rows)
       logLine(name, f"stage $name done: $rows rows")
     }

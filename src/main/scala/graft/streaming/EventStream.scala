@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.util.Fs.rmTree
+
 /** Structured Streaming over the `events` table.
   *
   * The reference has no streams (SURVEY.md §2.9); this is the engine's
@@ -20,12 +22,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * [[graft.Tables.events]]. Nothing below assumes the physical encoding.
   */
 object EventStream {
-
-  /** Remove a staged temp dir once its replay finished (the memory sink
-    * holds the results; repeated bench/oracle runs must not accumulate
-    * fixture copies in /tmp). */
-  private[streaming] def rmTree(p: java.nio.file.Path): Unit =
-    graft.util.Fs.rmTree(p)
 
   /** State-partition count for the fixture replays (guide §2.2: size
     * partitions to the data, here the STATE volume). A stateful streaming

@@ -130,8 +130,8 @@ object SessionStream {
       .writeStream.outputMode("append").format("memory").queryName(queryName).start()
     try q.processAllAvailable() finally {
       q.stop()
-      EventStream.rmTree(srcDir)
-      EventStream.rmTree(sentinelDir)
+      graft.util.Fs.rmTree(srcDir)
+      graft.util.Fs.rmTree(sentinelDir)
     }
     spark.table(queryName).filter(col("user_id") >= 0)
   }

@@ -26,4 +26,18 @@ object Fs {
       stream.iterator().asScala.toVector
     } finally stream.close()
   }
+
+  /** Each directory under `root` (itself included) that directly holds
+    * `.parquet` files, with those files, depth first in name order. Enters
+    * `k=v` directories only, skipping what Spark's reader skips (`.`-names,
+    * `_`-names without `=`); `visit` sees each directory before listing. */
+  def parquetLeaves(root: Path, visit: Path => Unit = _ => ()): Seq[(Path, Seq[Path])] = {
+    visit(root)
+    val (dirs, files) = listDir(root).filterNot { p =>
+      val n = p.getFileName.toString
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }.sortBy(_.getFileName.toString).partition(Files.isDirectory(_))
+    Seq(root -> files.filter(_.getFileName.toString.endsWith(".parquet"))).filter(_._2.nonEmpty) ++
+      dirs.filter(_.getFileName.toString.contains("=")).flatMap(parquetLeaves(_, visit))
+  }
 }

@@ -23,10 +23,4 @@ object Bridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Non-blocking read of an [[org.apache.spark.sql.Observation]]'s metrics
-    * (`getOrEmpty` is `private[sql]`; the public `get` blocks forever if the
-    * observed plan never executes). */
-  def observationMetrics(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
 }

@@ -49,6 +49,121 @@ class LoadSpec extends SparkTestBase {
     assert(spark.read.parquet(out).count() == orders.count())
   }
 
+  /** Sorted row strings of a table, partition columns included. */
+  private def rowMultiset(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
+
+  private def parquetNames(dir: java.io.File): Set[String] =
+    dir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+
+  test("compact rewrites only over-budget leaves and keeps the Hive layout") {
+    val orders = graft.Tables.orders(spark, sf0001)
+    val out = Files.createTempDirectory("graft-compact-leaf").resolve("t").toString
+    // one file per partition, then four more into two of the five
+    orders.repartition(1).write.partitionBy("o_orderpriority").parquet(out)
+    val grown = Set("1-URGENT", "3-MEDIUM")
+    orders.filter($"o_orderpriority".isin(grown.toSeq: _*)).repartition(4)
+      .write.mode("append").partitionBy("o_orderpriority").parquet(out)
+    val leaves = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("o_orderpriority=")).sortBy(_.getName)
+    assert(leaves.length == 5)
+    val namesBefore = leaves.map(l => l.getName -> parquetNames(l)).toMap
+    assert(namesBefore.count(_._2.size == 5) == 2, namesBefore)
+    val before = rowMultiset(out)
+    Load.compact(spark, out, 2)
+    leaves.foreach { l =>
+      if (grown(l.getName.stripPrefix("o_orderpriority=")))
+        assert(parquetNames(l).size == 2, l.getName)
+      else assert(parquetNames(l) == namesBefore(l.getName), l.getName)
+    }
+    // no flat files, no staging left behind; rows identical
+    val top = new java.io.File(out).listFiles().map(_.getName)
+    assert(top.filter(_.startsWith("o_orderpriority=")).length == 5, top.mkString(","))
+    assert(!top.exists(n => n.endsWith(".parquet") || n.startsWith(".compacting-") ||
+      n.startsWith(".precompact-")), top.mkString(","))
+    assert(rowMultiset(out) == before)
+    val urgent = spark.read.parquet(out).filter($"o_orderpriority" === "1-URGENT")
+    val plan = urgent.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [isnotnull(o_orderpriority"), plan)
+  }
+
+  test("staging siblings are invisible to readers and recovered by compact") {
+    import java.nio.file.Paths
+    import org.apache.commons.io.FileUtils
+    val orders = graft.Tables.orders(spark, sf0001)
+    val out = Files.createTempDirectory("graft-compact-stage").resolve("t").toString
+    orders.repartition(3).write.partitionBy("o_orderpriority").parquet(out)
+    val rows = spark.read.parquet(out).count()
+    // mid-write state: a full staged copy of one partition beside it
+    val urgent = Paths.get(out, "o_orderpriority=1-URGENT")
+    val staged = Paths.get(out, ".compacting-o_orderpriority=1-URGENT")
+    FileUtils.copyDirectory(urgent.toFile, staged.toFile)
+    assert(spark.read.parquet(out).count() == rows)
+    // crash state: another partition's original stranded at its backup name
+    val high = Paths.get(out, "o_orderpriority=2-HIGH")
+    val stranded = Paths.get(out, ".precompact-o_orderpriority=2-HIGH")
+    Files.move(high, stranded)
+    Load.compact(spark, out, 1)
+    assert(!Files.exists(staged) && !Files.exists(stranded) && Files.exists(high))
+    assert(spark.read.parquet(out).count() == rows)
+    assert(parquetNames(high.toFile).size == 1)
+  }
+
+  test("compaction merges evolved schemas: no column is dropped on rewrite") {
+    def evolved(): String = {
+      val out = Files.createTempDirectory("graft-compact-merge").resolve("t").toString
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v1").coalesce(1).write.parquet(out)
+      Seq((3L, 30.0), (4L, 40.0)).toDF("k", "v2").coalesce(1)
+        .write.mode("append").parquet(out)
+      out
+    }
+    def assertMerged(out: String): Unit = {
+      val files = parquetNames(new java.io.File(out))
+      assert(files.size == 1, files)
+      // the one output FILE carries both columns — not a read-time merge
+      val back = spark.read.parquet(s"$out/${files.head}")
+      assert(back.columns.toSet == Set("k", "v1", "v2"), back.columns.mkString(","))
+      assert(back.select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+      assert(back.filter($"v1".isNotNull && $"v2".isNotNull).isEmpty)
+    }
+    val compacted = evolved()
+    Load.compact(spark, compacted, 1)
+    assertMerged(compacted)
+    // the planned path too: one bin over a flat table's only leaf, part ""
+    val planned = evolved()
+    val manifest = Load.parquetManifest(spark, planned)
+    val plan = graft.operators.Layout
+      .compactionPlan(manifest.select("part", "file_id", "bytes"), Long.MaxValue)
+      .join(manifest.select("part", "file_id", "file"), Seq("part", "file_id"))
+    assert(Load.executeCompaction(spark, planned, "", plan) == 1)
+    assertMerged(planned)
+  }
+
+  test("parquetManifest lists every leaf of a two-level layout") {
+    val orders = graft.Tables.orders(spark, sf0001)
+    val out = Files.createTempDirectory("graft-manifest2").resolve("t").toString
+    orders.repartition(2).write.partitionBy("o_orderstatus", "o_orderpriority").parquet(out)
+    val manifest = Load.parquetManifest(spark, out).collect()
+    val leaves = Files.walk(java.nio.file.Paths.get(out)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+        !p.getFileName.toString.startsWith("."))
+    assert(manifest.length == leaves.length && leaves.length > 0)
+    assert(manifest.map(_.getString(2)).toSet == leaves.map(_.toString).toSet)
+    manifest.foreach { r =>
+      val part = r.getString(0)
+      assert(part.matches("o_orderstatus=[^/]+/o_orderpriority=[^/]+"), part)
+      assert(r.getString(2).startsWith(s"$out/$part/"))
+      assert(r.getLong(3) == Files.size(java.nio.file.Paths.get(r.getString(2))))
+    }
+    // file_id is 0..n-1 by name within each leaf
+    manifest.groupBy(_.getString(0)).values.foreach { rs =>
+      val byId = rs.sortBy(_.getLong(1))
+      assert(byId.map(_.getLong(1)).toSeq == byId.indices.map(_.toLong))
+      assert(byId.map(_.getString(2)).toSeq == byId.map(_.getString(2)).sorted.toSeq)
+    }
+  }
+
   test("z2 executed end-to-end: planned bins become exactly that many files, " +
     "and the zone-map scan fraction matches the plan's prediction") {
     import org.apache.spark.sql.functions._
@@ -123,7 +238,7 @@ class LoadSpec extends SparkTestBase {
     // simulate a crash after the first move: original stranded at
     // .precompact, no live partition dir
     val target = java.nio.file.Paths.get(out, part)
-    val stranded = java.nio.file.Paths.get(out, part + ".precompact")
+    val stranded = java.nio.file.Paths.get(out, ".precompact-" + part)
     java.nio.file.Files.move(target, stranded)
     assert(!java.nio.file.Files.exists(target))
     val achieved = Load.executeCompaction(spark, out, part, plan)
@@ -148,7 +263,7 @@ class LoadSpec extends SparkTestBase {
     // simulate a crash AFTER the tmp→target swap but BEFORE rmTree(old):
     // target holds the compacted copy, a stranded .precompact backup
     // remains, and the plan's source files no longer exist
-    val stranded = java.nio.file.Paths.get(out, part + ".precompact")
+    val stranded = java.nio.file.Paths.get(out, ".precompact-" + part)
     Files.createDirectory(stranded)
     Files.write(stranded.resolve("junk.parquet"), Array[Byte](1, 2, 3))
     // rerun must detect the completed swap: finish cleanup and report the

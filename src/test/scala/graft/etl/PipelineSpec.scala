@@ -33,4 +33,20 @@ class PipelineSpec extends SparkTestBase {
     assert(runs.head.rows == 100)
     assert(hits.value == 100, s"lineage executed ${hits.value / 100.0} times")
   }
+
+  test("a stage whose plan never runs reports -1 / unmeasured within maxWaitMs") {
+    val p = new Pipeline(spark)
+    val ran = p.stage("ran", Tables.customer(spark, sf0001).limit(10))
+    p.stage("never1", Tables.customer(spark, sf0001))
+    p.stage("never2", Tables.orders(spark, sf0001))
+    ran.write.format("noop").mode("overwrite").save()
+    val maxWaitMs = 1000L
+    val t0 = System.nanoTime()
+    val runs = p.finish(maxWaitMs)
+    val waitedMs = (System.nanoTime() - t0) / 1000000L
+    assert(runs.map(r => (r.stage, r.status, r.rows)) == Seq(
+      ("ran", "done", 10L), ("never1", "unmeasured", -1L), ("never2", "unmeasured", -1L)))
+    // one shared deadline: two never-run stages cost one maxWaitMs, not two
+    assert(waitedMs < 2 * maxWaitMs, s"waited $waitedMs ms")
+  }
 }
