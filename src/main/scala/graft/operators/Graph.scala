@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Iterative graph analytics as Spark plans. Companion to the
   * connected-components operator in [[Dedup.duplicateClusters]]: same
@@ -26,60 +26,74 @@ object Graph {
     * trick also lets the DuckDB recursive-CTE oracle reference the
     * working table exactly once.
     *
-    * Scale shape: ranks ⋈ contribs is a shuffle-or-broadcast hash join
-    * keyed on the node id, followed by one map-side-combinable decimal
-    * sum per iteration — the textbook bulk-synchronous PageRank round.
-    * Iteration count is a fixed parameter (rounds, not convergence
+    * Scale shape: the partitioned PageRank of the Spark RDD paper
+    * (Zaharia et al., NSDI 2012, §3.2.2). ranks ⋈ contribs is a shuffled
+    * hash join built on the rank state, never a broadcast: a broadcast
+    * rank state cannot scale to 10⁹ nodes, and even a small string-keyed
+    * broadcast relation pins whole memory pages until Spark's
+    * ContextCleaner drops it. Each round's grouped sum leaves the state
+    * hash-partitioned by node, so the state side needs no exchange, and
+    * the exchange over contribs is the same every round, so Spark reuses
+    * it — the edge list shuffles a fixed number of times, not once per
+    * round. Iteration count is a fixed parameter (rounds, not convergence
     * polling), so the driver never inspects data between rounds. */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 5,
                damping: Double = 0.85): DataFrame = {
+    // N as a bounded driver scalar (shortestPaths' maxD discipline, read
+    // once BEFORE the rounds): a per-round crossJoin(broadcast(nn)) would
+    // re-build the 1-row count subquery as its own broadcast stage in
+    // EVERY round — Spark does not dedup cross-branch subplans.
+    // lit(teleport/n) is the same IEEE double division a broadcast column
+    // would feed, so every rank is bit-identical.
+    val nD = nodes.queryExecution.toRdd.count().toDouble
+    rankRounds(nodes, edges, iters, damping, lit(1.0 / nD), tele => lit(tele / nD), "rank")
+  }
+
+  /** The bulk-synchronous round chain shared by [[pageRank]] and
+    * [[personalizedPageRank]]: they differ only in the initial ranks
+    * `init`, the teleport term (a function of the 1e-12-rounded (1−d))
+    * and the output column. Both node-keyed joins are shuffled hash joins
+    * built on the node-bounded side (`outdeg`, `ranks`), so no round
+    * broadcasts. */
+  private def rankRounds(nodes: DataFrame, edges: DataFrame, iters: Int,
+                         damping: Double, init: Column,
+                         teleport: Double => Column, out: String): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val contribs = edges.join(outdeg, "src")
+    val contribs = edges.join(outdeg.hint("shuffle_hash"), "src")
       .select(col("src"), col("dst"),
         portableRound(lit(damping) / col("deg"), 12).as("w"))
       .unionByName(nodes.select(col("node").as("src"), col("node").as("dst"),
         lit(0.0).as("w")))
       .localCheckpoint() // reused every round: never replay the edge build
-    // N as a bounded driver scalar (shortestPaths' maxD discipline, read
-    // once BEFORE the rounds): the earlier per-round crossJoin(broadcast(
-    // nn)) re-built the 1-row count subquery as its own broadcast stage in
-    // EVERY round — Spark does not dedup cross-branch subplans — and the
-    // round chains are job-count-bound, not compute-bound. lit(1.0/n) and
-    // lit(teleport/n) are the same IEEE double divisions the broadcast
-    // column fed, so every rank is bit-identical.
-    val nD = nodes.queryExecution.toRdd.count().toDouble
-    var ranks = nodes.select(col("node"), lit(1.0 / nD).as("r"))
+    // teleport rounded to 1e-12 so it is BIT-identical to the oracle's
+    // decimal literal: 1.0 - 0.85 in binary floating point is
+    // 0.15000000000000002, one ulp above the parsed 0.15
+    val tele = teleport(math.floor((1.0 - damping) * 1e12 + 0.5) / 1e12)
+    var ranks = nodes.select(col("node"), init.as("r"))
     // checkpoint the rank frame every few rounds, not every round: the
     // expensive lineage (the edge build) is already cut by contribs'
     // checkpoint, so short runs execute as one job — but Catalyst
     // re-optimizes the whole accumulated plan per round, which grows
     // superlinearly past a handful of nested join+agg rounds (measured:
-    // 50 unckeckpointed rounds hang analysis), so bound the segment depth
-    // the whole round chain is ONE action planned at whatever conf rules
-    // when the caller finally acts on it — i.e. the session's scan-sized
-    // shuffle partitions, although every post-edge frame is node-bounded.
-    // Execute it HERE, inside a loop-state-sized conf scope ending in a
-    // lineage cut (the one-shot → sized-loop conversion): the returned
+    // 50 uncheckpointed rounds hang analysis), so bound the segment depth.
+    // The chain is node-bounded, so it executes HERE, inside a
+    // loop-state-sized conf scope ending in a lineage cut: the returned
     // frame replays node-sized in-memory blocks, and the caller's action
     // plans only its own operators at the session conf.
     val spark = nodes.sparkSession
     graft.util.LoopConf.withShuffleParts(spark,
       graft.util.LoopConf.sizedParts(spark, graft.util.LoopConf.rowsOf(contribs))) {
       for (i <- 1 to iters) {
-        ranks = ranks.join(contribs, ranks("node") === contribs("src"))
+        ranks = ranks.hint("shuffle_hash").join(contribs, ranks("node") === contribs("src"))
           .groupBy(col("dst"))
           .agg(sum(portableRound(col("r") * col("w"), 12).cast("decimal(28,12)"))
             .as("contrib"))
           .select(col("dst").as("node"),
-            // teleport literal rounded to 1e-12 so it is BIT-identical to
-            // the oracle's decimal literal: 1.0 - 0.85 in binary floating
-            // point is 0.15000000000000002, one ulp above the parsed 0.15
-            portableRound(lit(math.floor((1.0 - damping) * 1e12 + 0.5) / 1e12 /
-              nD) + col("contrib").cast("double"), 10).as("r"))
+            portableRound(tele + col("contrib").cast("double"), 10).as("r"))
         if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
       }
-      ranks.select(col("node"), col("r").as("rank")).localCheckpoint()
+      ranks.select(col("node"), col("r").as(out)).localCheckpoint()
     }
   }
 
@@ -687,41 +701,16 @@ object Graph {
     * as decimal(28,12), and the oracle unrolls the fixed rounds digit
     * for digit. Init mass 1 at the source; the teleport term is
     * (1−damping) AT THE SOURCE ONLY, so unreached nodes hold exact 0.
-    * Scale shape identical to pageRank: one hash join + one grouped sum
-    * per round on a node-sized frame, edges checkpointed once. */
+    * Scale shape identical to pageRank (the same round function): one
+    * co-partitioned hash join + one grouped sum per round on a node-sized
+    * frame, edges checkpointed once. */
   def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
                            source: String, iters: Int = 5,
-                           damping: Double = 0.85): DataFrame = {
-    require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val contribs = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"),
-        portableRound(lit(damping) / col("deg"), 12).as("w"))
-      .unionByName(nodes.select(col("node").as("src"), col("node").as("dst"),
-        lit(0.0).as("w")))
-      .localCheckpoint()
-    val tele = math.floor((1.0 - damping) * 1e12 + 0.5) / 1e12
-    var ranks = nodes.select(col("node"),
-      when(col("node") === source, 1.0).otherwise(0.0).as("r"))
-    // same one-shot → sized-loop conversion as [[pageRank]]: execute the
-    // node-bounded round chain inside a sized conf scope, return the
-    // materialized frame
-    val spark = nodes.sparkSession
-    graft.util.LoopConf.withShuffleParts(spark,
-      graft.util.LoopConf.sizedParts(spark, graft.util.LoopConf.rowsOf(contribs))) {
-      for (i <- 1 to iters) {
-        ranks = ranks.join(contribs, ranks("node") === contribs("src"))
-          .groupBy(col("dst"))
-          .agg(sum(portableRound(col("r") * col("w"), 12).cast("decimal(28,12)"))
-            .as("contrib"))
-          .select(col("dst").as("node"),
-            portableRound(when(col("dst") === source, lit(tele))
-              .otherwise(lit(0.0)) + col("contrib").cast("double"), 10).as("r"))
-        if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
-      }
-      ranks.select(col("node"), col("r").as("proximity")).localCheckpoint()
-    }
-  }
+                           damping: Double = 0.85): DataFrame =
+    rankRounds(nodes, edges, iters, damping,
+      when(col("node") === source, 1.0).otherwise(0.0),
+      tele => when(col("dst") === source, lit(tele)).otherwise(lit(0.0)),
+      "proximity")
 
   /** BFS1 — single-source shortest paths + shortest-path COUNTS over a
     * directed graph, the min-plus leg the graph family lacked (d7 finds

@@ -69,11 +69,38 @@ object EventStream {
     * pins the value into the stream's OffsetSeqMetadata when the query
     * starts and plans every micro-batch with it. */
   private[streaming] def withStateSizedShuffle[T](spark: SparkSession,
-      stateRows: Long)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions(spark, stateRows).toString)
-    try body finally spark.conf.set(key, prev)
+      stateRows: Long)(body: => T): T =
+    graft.util.LoopConf.withShuffleParts(spark, statePartitions(spark, stateRows))(body)
+
+  /** Stage `df` for a multi-batch replay split on its long column
+    * `splitCol`: three equal-width `splitCol` ranges, one parquet file
+    * each under `b0`..`b2` of a fresh temp dir (the caller's to delete).
+    * Batch order = file modification order, so the mtimes are pinned
+    * strictly ascending: a coarse-granularity FS can never reorder the
+    * ranges. Returns the dir and `df`'s row count, which rides the bounds
+    * agg and sizes the replay's state partitions. An input with no
+    * non-null `splitCol` has no range to split and fails naming `stream`
+    * and `splitCol`. */
+  private[streaming] def stageRangeBatches(df: DataFrame, stream: String,
+      splitCol: String): (java.nio.file.Path, Long) = {
+    val b = df.agg(min(col(splitCol)), max(col(splitCol)), count(lit(1))).head
+    require(!b.isNullAt(0), s"$stream: input has no non-null $splitCol " +
+      s"(${b.getLong(2)} rows), so there is no range to split into micro-batches")
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val span = (hi - lo) / 3 + 1
+    val srcDir = Files.createTempDirectory(
+      s"graft-stream-${stream.stripSuffix("Stream").toLowerCase}")
+    for (i <- 0 until 3)
+      df.filter(col(splitCol) >= lo + i * span && col(splitCol) < lo + (i + 1) * span)
+        .coalesce(1).write.parquet(srcDir.toString + s"/b$i")
+    val now = System.currentTimeMillis()
+    for (i <- 0 until 3)
+      Files.walk(srcDir.resolve(s"b$i")).forEach { f =>
+        if (Files.isRegularFile(f))
+          Files.setLastModifiedTime(f,
+            java.nio.file.attribute.FileTime.fromMillis(now - 60000L * (3 - i)))
+      }
+    (srcDir, b.getLong(2))
   }
 
   /** Unique memory-sink query name per replay: a FIXED name is shared

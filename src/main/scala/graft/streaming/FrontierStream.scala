@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
@@ -37,28 +35,10 @@ object FrontierStream {
     * the replay is genuinely multi-batch). */
   def runFrontierOverFixture(spark: SparkSession, fetches: DataFrame,
                              onBatch: Long => Unit = _ => ()): DataFrame = {
-    // count rides the bounds agg the splitter already runs: it sizes the
-    // replay's state partitions (EventStream.statePartitions) for free
-    val bounds = fetches
-      .agg(min(col("page_id")), max(col("page_id")), count(lit(1))).head
-    EventStream.withStateSizedShuffle(spark, bounds.getLong(2)) {
-    val srcDir = Files.createTempDirectory("graft-stream-frontier")
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = (hi - lo) / 3 + 1
-    for (i <- 0 until 3)
-      fetches.filter(col("page_id") >= lo + i * span &&
-          col("page_id") < lo + (i + 1) * span)
-        .coalesce(1).write.parquet(srcDir.toString + s"/b$i")
-    // batch order = file modification order: pin it explicitly so a
-    // coarse-granularity FS can never reorder the ranges (the lattice
-    // makes the RESULT order-free; the pin keeps onBatch counts stable)
-    val now = System.currentTimeMillis()
-    for (i <- 0 until 3)
-      Files.walk(srcDir.resolve(s"b$i")).forEach { f =>
-        if (Files.isRegularFile(f))
-          Files.setLastModifiedTime(f,
-            java.nio.file.attribute.FileTime.fromMillis(now - 60000L * (3 - i)))
-      }
+    // the lattice makes the RESULT order-free; the staged batch order
+    // keeps onBatch counts stable
+    val (srcDir, rows) = EventStream.stageRangeBatches(fetches, "FrontierStream", "page_id")
+    EventStream.withStateSizedShuffle(spark, rows) {
     val emptyRel = (schema: StructType) => spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     var agg = emptyRel(StructType(Seq(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -48,27 +46,8 @@ object ReleaseStream {
       spark: SparkSession, delta: DataFrame, baseRel: DataFrame,
       gateOk: DataFrame => DataFrame,
       onBatch: Long => Unit = _ => ()): (DataFrame, DataFrame, Long) = {
-    // count rides the bounds agg the splitter already runs: it sizes the
-    // replay's state partitions (EventStream.statePartitions) for free
-    val bounds = delta
-      .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1))).head
-    EventStream.withStateSizedShuffle(spark, bounds.getLong(2)) {
-    val srcDir = Files.createTempDirectory("graft-stream-release")
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = (hi - lo) / 3 + 1
-    for (i <- 0 until 3)
-      delta.filter(col("doc_id") >= lo + i * span &&
-          col("doc_id") < lo + (i + 1) * span)
-        .coalesce(1).write.parquet(srcDir.toString + s"/b$i")
-    // batch order = file modification order: pin it explicitly so a
-    // coarse-granularity FS can never reorder the ranges
-    val now = System.currentTimeMillis()
-    for (i <- 0 until 3)
-      Files.walk(srcDir.resolve(s"b$i")).forEach { f =>
-        if (Files.isRegularFile(f))
-          Files.setLastModifiedTime(f,
-            java.nio.file.attribute.FileTime.fromMillis(now - 60000L * (3 - i)))
-      }
+    val (srcDir, rows) = EventStream.stageRangeBatches(delta, "ReleaseStream", "doc_id")
+    EventStream.withStateSizedShuffle(spark, rows) {
     val emptyRel = (schema: StructType) => spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     var seen = emptyRel(StructType(Seq(

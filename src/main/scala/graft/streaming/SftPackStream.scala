@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -58,27 +56,10 @@ object SftPackStream {
       least(col("n_tokens_used").cast("long"), lit(cap)).as("eff_tok"),
       col("assistant_tokens").cast("long").as("a_tok"))
     // split the replay on ORD boundaries: the per-shard processing order,
-    // so each batch is a prefix-extension of every shard's fold. The
-    // count rides the bounds agg and sizes the replay's state partitions.
-    val bounds = annotated
-      .agg(min(col("ord")), max(col("ord")), count(lit(1))).head
-    EventStream.withStateSizedShuffle(spark, bounds.getLong(2)) {
-    val srcDir = Files.createTempDirectory("graft-stream-sftpack")
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = (hi - lo) / 3 + 1
-    for (i <- 0 until 3)
-      annotated.filter(col("ord") >= lo + i * span &&
-          col("ord") < lo + (i + 1) * span)
-        .coalesce(1).write.parquet(srcDir.toString + s"/b$i")
-    // batch order = file modification order: pin it explicitly — unlike
+    // so each batch is a prefix-extension of every shard's fold — unlike
     // st19's lattice, the packer fold REQUIRES ord-ascending batches
-    val now = System.currentTimeMillis()
-    for (i <- 0 until 3)
-      Files.walk(srcDir.resolve(s"b$i")).forEach { f =>
-        if (Files.isRegularFile(f))
-          Files.setLastModifiedTime(f,
-            java.nio.file.attribute.FileTime.fromMillis(now - 60000L * (3 - i)))
-      }
+    val (srcDir, rows) = EventStream.stageRangeBatches(annotated, "SftPackStream", "ord")
+    EventStream.withStateSizedShuffle(spark, rows) {
     var bins = spark.createDataFrame(
       new java.util.ArrayList[Row](), StructType(Seq(
         StructField("shard", LongType), StructField("seq_id", LongType),

@@ -1,6 +1,12 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -78,6 +84,77 @@ class GraphSpec extends SparkTestBase {
     val r2 = Graph.pageRank(nodes.repartition(3), edges.repartition(5), iters = 5)
       .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(r1 == r2) // bit-identical, not approximately equal
+  }
+
+  /** Executed plans of every `localCheckpoint` action `body` runs. The
+    * QueryExecutionListener sits on Spark's shared listener queue, which
+    * delivers in posting order, so once a marked sentinel query is seen
+    * every plan `body` posted has been recorded. */
+  private def checkpointPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("plan_capture_sentinel").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      def drained = plans.asScala.exists(_._2.output.exists(_.name == "plan_capture_sentinel"))
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(drained, "listener queue did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.collect { case ("localCheckpoint", p) => p }.toSeq
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Does `p` read only the checkpointed contribs frame (src, dst, w)? */
+  private def overContribs(p: SparkPlan): Boolean = PlanWalk.collectLeaves(p).forall {
+    case s: RDDScanExec => s.output.map(_.name) == Seq("src", "dst", "w")
+    case _ => false
+  }
+
+  test("pageRank/personalizedPageRank: rounds are co-partitioned shuffled hash " +
+    "joins — no broadcast, and the contribs exchange does not grow with iters") {
+    val edges = Seq(("b", "a"), ("c", "a"), ("d", "a"), ("a", "b"), ("a", "c"))
+      .toDF("src", "dst")
+    for ((name, run) <- Seq[(String, Int => Unit)](
+        "pageRank" -> (n => Graph.pageRank(nodes, edges, iters = n)),
+        "personalizedPageRank" ->
+          (n => Graph.personalizedPageRank(nodes, edges, "a", iters = n)))) {
+      // per round-segment plan (the rank chain checkpoints every 5
+      // rounds): (ranks ⋈ contribs joins, fresh exchanges over contribs)
+      def segments(iters: Int): Seq[(Int, Int)] = {
+        val plans = checkpointPlans(run(iters))
+        val broadcasts = plans.flatMap(p => PlanWalk.collect(p) {
+          case j: BroadcastHashJoinExec => j
+          case x: BroadcastExchangeExec => x
+        })
+        assert(broadcasts.isEmpty, s"$name at iters=$iters broadcasts: " +
+          broadcasts.map(_.nodeName).mkString(", "))
+        plans.map { p =>
+          val rounds = PlanWalk.collect(p) {
+            case j: ShuffledHashJoinExec if j.output.exists(_.name == "r") => j
+          }
+          val fresh = PlanWalk.collect(p) {
+            case x: ShuffleExchangeExec if overContribs(x) => x
+          }
+          (rounds.size, fresh.size)
+        }.filter(_._1 > 0)
+      }
+      val five = segments(5)
+      val ten = segments(10)
+      assert(five.map(_._1) == Seq(5) && ten.map(_._1) == Seq(5, 5),
+        s"$name: ranks ⋈ contribs is not a ShuffledHashJoin in every round: $five / $ten")
+      // Spark reuses the contribs exchange across the rounds of a segment,
+      // so doubling iters adds no edge shuffle to any segment
+      assert(five.head._2 < 5, s"$name: contribs re-shuffled every round: $five")
+      assert(ten.map(_._2).distinct == Seq(five.head._2),
+        s"$name: fresh contribs exchanges per segment $five at iters=5 vs $ten at iters=10")
+    }
   }
 
   test("triangleCount: counts each triangle once, collapses direction/dups") {

@@ -44,4 +44,12 @@ class FrontierStreamSpec extends SparkTestBase {
     assert(r.getAs[Long]("kept_page_id") == 1)
     assert(r.getAs[java.sql.Timestamp]("first_ts") == t2)
   }
+
+  test("empty input fails with the stream and split column named, not an NPE") {
+    val fetches = Seq.empty[(Long, java.sql.Timestamp, String)].toDF("page_id", "ts", "url")
+    val e = intercept[IllegalArgumentException](
+      FrontierStream.runFrontierOverFixture(spark, fetches))
+    assert(e.getMessage.contains("FrontierStream") && e.getMessage.contains("page_id"),
+      e.getMessage)
+  }
 }

@@ -62,4 +62,14 @@ class ReleaseStreamSpec extends SparkTestBase {
     assert(seenIds == Set(1L, 450L, 900L), s"digest-new set: $seenIds")
     assert(admittedIds == Set(1L, 450L), s"admitted set: $admittedIds")
   }
+
+  test("empty input fails with the stream and split column named, not an NPE") {
+    import spark.implicits._
+    val delta = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
+    val base = Seq.empty[(Long, String, String, Long)].toDF("doc_id", "text", "source", "n_tok")
+    val e = intercept[IllegalArgumentException](
+      ReleaseStream.runDeltaAdmissionOverFixture(spark, delta, base, Queries.releaseGateOk))
+    assert(e.getMessage.contains("ReleaseStream") && e.getMessage.contains("doc_id"),
+      e.getMessage)
+  }
 }

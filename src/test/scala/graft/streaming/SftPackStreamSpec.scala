@@ -43,4 +43,13 @@ class SftPackStreamSpec extends SparkTestBase {
     assert(r.map(_.getAs[Long]("n_bins")).sum == ref,
       "streamed bin count must equal the batch packer's")
   }
+
+  test("empty input fails with the stream and split column named, not an NPE") {
+    val conv = Seq.empty[(Long, Long, Long)]
+      .toDF("doc_id", "n_tokens_used", "assistant_tokens")
+    val e = intercept[IllegalArgumentException](
+      SftPackStream.runSftPackOverFixture(spark, conv))
+    assert(e.getMessage.contains("SftPackStream") && e.getMessage.contains("ord"),
+      e.getMessage)
+  }
 }
