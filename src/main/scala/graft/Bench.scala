@@ -1,32 +1,97 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: headline queries on SPARK_GRAFT_SF_DIR, one JSON
   * line on stdout. Each query executes fully through a `noop`-format write
   * (a bare `.count()` would let Catalyst prune the projections under
-  * measurement). */
+  * measurement). Also home of what every graft entry point shares: the
+  * session, the `SPARK_GRAFT_ONLY` name filter and the timed run. */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The one session builder of every graft main (the specs use it too):
+    * the confs and plan extensions the bench measures. Re-calling it on a
+    * live session re-assigns the same extensions, never appends them. */
+  def session(cores: Int, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      // events.ts may be parquet TIMESTAMP(NANOS): read as raw long nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.experimental.extraOptimizations = Seq(graft.plans.PushableKeyCast)
     spark.experimental.extraStrategies = Seq(graft.plans.TopKPerKeyStrategy)
+    spark
+  }
+
+  /** (cores, shuffle partitions) from SPARK_GRAFT_CPUS (default 4) and
+    * SPARK_GRAFT_SHUFFLE (default: the core count). */
+  def envLayout: (Int, Int) = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    (cores, sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cores))
+  }
+
+  def envSession(): SparkSession = {
+    val (cores, shuffle) = envLayout
+    session(cores, shuffle)
+  }
+
+  /** A comma list of query names, trimmed; `None` (no filter) when it
+    * names nothing. Unknown names fail loudly: a typo that silently
+    * selects nothing would let an unrun query look checked. */
+  def nameFilter(list: String): Option[Set[String]] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"not registered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    Some(names).filter(_.nonEmpty)
+  }
+
+  /** The dev-only SPARK_GRAFT_ONLY subset; the driver sets none. */
+  def onlyFromEnv: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").flatMap(nameFilter)
+
+  /** Explicitly selected names: bench rows in wall order, then the rest
+    * sorted. */
+  def inOrder(sel: Set[String]): Seq[String] = {
+    val benchable = Queries.benchNames ++ Queries.retiredBenchNames
+    (benchable ++ (SparkEntry.queries.keySet -- benchable).toSeq.sorted)
+      .filter(sel.contains)
+  }
+
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Runs `name` once at sf0.001: moves Janino codegen compilation + JIT
+    * out of the measured runs (steady-state throughput is what the
+    * 100 TB story depends on, not per-plan compile time). A failure is
+    * reported, not thrown: the measured run reports it again. */
+  def warm(spark: SparkSession, name: String): Unit =
+    try noop(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name warm-up FAILED: ${e.getMessage}")
+    }
+
+  /** Seconds for one `noop` write of `name` on `sfDir`, after a
+    * `System.gc()`: prior queries' shuffle/broadcast garbage otherwise
+    * lands in this measurement. */
+  def timed(spark: SparkSession, name: String, sfDir: String): Double = {
+    val fn = SparkEntry.queries(name)
+    System.gc()
+    val t0 = System.nanoTime()
+    noop(fn(spark, sfDir))
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val (cpus, defaultShuffle) = envLayout
+    val spark = session(cpus, defaultShuffle)
     // dev-only subset filter (tools/scale_sweep.py uses it to time its
     // canary-scale subset); the driver sets nothing and measures all.
-    // Unknown names fail loudly, same contract as Verify's filter.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val only = onlyFromEnv
     // per-query shuffle-partition override ("name=N,name2=M"): the scale
     // sweeps size the exchange to the synthetic corpus — a deployment
     // scales spark.sql.shuffle.partitions with input (COST.md §2), which
@@ -36,7 +101,6 @@ object Bench {
     // before each query (overridden queries set theirs; everything else
     // runs at the default, re-set before its own run). The driver sets
     // nothing.
-    val defaultShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val shuffleByQuery: Map[String, String] =
       sys.env.get("SPARK_GRAFT_SHUFFLE_BY_QUERY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
@@ -53,28 +117,9 @@ object Bench {
     // explicit ONLY may also name any REGISTERED query (the scale
     // sweeps measure verify-tier shapes without adding wall rows); the
     // default run stays exactly the active bench wall.
-    val benchable = Queries.benchNames ++ Queries.retiredBenchNames
-    only.foreach { ns =>
-      val unknown = ns -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not registered queries: ${unknown.mkString(", ")}")
-    }
-    val names = only match {
-      case Some(sel) =>
-        (benchable ++ (SparkEntry.queries.keySet -- benchable.toSet).toSeq.sorted)
-          .filter(sel.contains)
-      case None =>
-        benchable.filter(SparkEntry.queries.contains)
-          .filterNot(Queries.retiredBenchNames.contains)
-    }
-    // warm every query shape at the smallest SF first: moves Janino codegen
-    // compilation + JIT out of the measured runs (steady-state throughput is
-    // what the 100 TB story depends on, not per-plan compile time)
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val names = only.map(inOrder)
+      .getOrElse(Queries.benchNames.filter(SparkEntry.queries.contains))
+    names.foreach(warm(spark, _))
     // bucketed-table setup is write-time work a real deployment pays once,
     // not per query — do it before the measured runs
     try Tables.ensureBucketed(spark, sfDir)
@@ -82,19 +127,13 @@ object Bench {
       System.err.println(s"[bench] bucketed setup failed: ${e.getMessage}")
     }
     def measure(): Seq[(String, Double, Boolean)] = names.map { name =>
-      val fn = SparkEntry.queries(name)
       spark.conf.set("spark.sql.shuffle.partitions",
-        shuffleByQuery.getOrElse(name, defaultShuffle))
-      // settle the JVM between queries: prior queries' shuffle/broadcast
-      // garbage otherwise lands in the next query's measurement
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-        }
-      (name, (System.nanoTime() - t0) / 1e9, ok)
+        shuffleByQuery.getOrElse(name, defaultShuffle.toString))
+      try (name, timed(spark, name, sfDir), true)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        (name, 0.0, false)
+      }
     }
     // canaries: code-untouched queries whose drift measures VM noise, not
     // regressions — BASELINE.md records them moving in lockstep across

@@ -12651,8 +12651,8 @@ object Queries {
     * tier policy (the wall's quiet-run feasibility budget is ~240 s):
     * each keeps its full per-round DuckDB oracle (verify-tier — the
     * capability and its correctness gate are unchanged) and stays
-    * reachable by Bench/ExplainDump when EXPLICITLY named via
-    * SPARK_GRAFT_BENCH_ONLY / SPARK_GRAFT_ONLY for guard-protocol
+    * reachable by Bench/Tool when EXPLICITLY named via
+    * SPARK_GRAFT_ONLY / Tool's name arguments for guard-protocol
     * re-measures; it just no longer pays recurring wall time.
     *  - d13_span_keep_first: d12's scan + rollup with one extra
     *    min(doc_id) carried — d12 is the benched sibling and its 10×
@@ -12700,7 +12700,7 @@ object Queries {
 
   /** The verify-tier SHIP-LINE compositions (never benched — every stage
     * keeps its own bench/guard row under the tier policy) whose physical
-    * plans are nonetheless pinned artifacts: ExplainDump always includes
+    * plans are nonetheless pinned artifacts: `Tool explain` always includes
     * them, and PlanSpec asserts each one's Exchange count equals the sum
     * of its stages' documented COST.md bills — the "no exchange beyond
     * the stages' own bills" claim as a failing test, not prose. */

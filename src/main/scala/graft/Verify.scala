@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet TIMESTAMP(NANOS): read as raw long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = Seq(graft.plans.PushableKeyCast)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKPerKeyStrategy)
+    val spark = Bench.envSession()
     new java.io.File(outDir).mkdirs()
     // fixture preflight: a regenerated-and-drifted fixture fails HERE as
     // one error naming every violated table.column, instead of as N
@@ -30,17 +17,8 @@ object Verify {
       sys.exit(2)
     }
     // dev-only subset filter (tools/check.py iterates over the dirs that
-    // exist); the driver sets no filter and always dumps everything.
-    // Unknown names fail LOUDLY — a typo that silently dumps nothing
-    // would let an unverified query look checked; empty value = no filter
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    // exist); the driver sets no filter and always dumps everything
+    val only = Bench.onlyFromEnv
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

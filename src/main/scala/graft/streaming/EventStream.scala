@@ -30,7 +30,7 @@ object EventStream {
     * checkpoint dir each batch — with day-grain keys the fixtures carry
     * a few thousand state rows, so inheriting the session's scan-sized
     * `spark.sql.shuffle.partitions` (32 on the bench) made the replays
-    * state-store-I/O-bound: ProfileOne measured st16/st17 at ~100 s of
+    * state-store-I/O-bound: `Tool profile` measured st16/st17 at ~100 s of
     * task time for ~4 s of useful work, and the 32→4 A/B cut wall ~2×
     * (OPTIMIZATION_r15.md). Results are partition-count independent
     * (hash-partitioned state, order-free folds), which the batch-parity

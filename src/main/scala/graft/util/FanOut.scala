@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * "input skew" / §6 input-split sizing): a parquet fixture small enough to
   * be a single row group scans as ONE task, so an expensive map-side
   * projection over it (per-span md5, shingle explosion, banded edit
-  * distance) runs on one core however many the session has — ProfileOne
+  * distance) runs on one core however many the session has — `Tool profile`
   * measured d12 at 11 tasks / 5 s of task time ≈ its whole wall.
   *
   * `scanParallel` round-robin-repartitions the frame to the session's

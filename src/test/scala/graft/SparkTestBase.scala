@@ -6,18 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (ScalaTest runs them in one forked JVM;
   * getOrCreate returns the same session everywhere). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.experimental.extraOptimizations = Seq(graft.plans.PushableKeyCast)
-    s.experimental.extraStrategies = Seq(graft.plans.TopKPerKeyStrategy)
-    s
-  }
+  /** Fixed at `local[4]` whatever the host's SPARK_GRAFT_CPUS: specs
+    * that pin plan or partition shapes assume this layout. */
+  lazy val spark: SparkSession = Bench.session(4, 4)
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 

@@ -357,7 +357,7 @@ def bench_once(sf_dir: str, out_file: str, subset, shuffle=None) -> dict:
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sf_dir,
                SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-               SPARK_GRAFT_BENCH_ONLY=",".join(subset),
+               SPARK_GRAFT_ONLY=",".join(subset),
                SPARK_GRAFT_BENCH_OUT=out_file)
     if shuffle is not None:
         env["SPARK_GRAFT_SHUFFLE"] = str(shuffle)
