@@ -87,38 +87,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val (cpus, defaultShuffle) = envLayout
-    val spark = session(cpus, defaultShuffle)
+    val (cpus, shuffle) = envLayout
+    val spark = session(cpus, shuffle)
     // dev-only subset filter (tools/scale_sweep.py uses it to time its
     // canary-scale subset); the driver sets nothing and measures all.
     val only = onlyFromEnv
-    // per-query shuffle-partition override ("name=N,name2=M"): the scale
-    // sweeps size the exchange to the synthetic corpus — a deployment
-    // scales spark.sql.shuffle.partitions with input (COST.md §2), which
-    // local[32]'s pinned 32 cannot express; als1 at x100 (60M ratings)
-    // spilled on 32 and read exp 1.14 for it (SCALE.md §R12). AQE
-    // coalesces the excess, so over-provisioning is safe. Runtime-set
-    // before each query (overridden queries set theirs; everything else
-    // runs at the default, re-set before its own run). The driver sets
-    // nothing.
-    val shuffleByQuery: Map[String, String] =
-      sys.env.get("SPARK_GRAFT_SHUFFLE_BY_QUERY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-          val parts = kv.split("=", 2)
-          require(parts.length == 2 && parts(0).trim.nonEmpty
-              && !parts(1).contains("="),
-            s"bad shuffle override '$kv': expected name=N")
-          require(scala.util.Try(parts(1).trim.toInt).filter(_ > 0).isSuccess,
-            s"bad shuffle override '$kv': N must be a positive int")
-          parts(0).trim -> parts(1).trim
-        }.toMap).getOrElse(Map.empty)
     // retired rows (BASELINE.md tier policy) run only when explicitly
     // named — a default full run measures the active wall alone. An
     // explicit ONLY may also name any REGISTERED query (the scale
     // sweeps measure verify-tier shapes without adding wall rows); the
     // default run stays exactly the active bench wall.
-    val names = only.map(inOrder)
-      .getOrElse(Queries.benchNames.filter(SparkEntry.queries.contains))
+    val names = only.map(inOrder).getOrElse(Queries.benchNames)
     names.foreach(warm(spark, _))
     // bucketed-table setup is write-time work a real deployment pays once,
     // not per query — do it before the measured runs
@@ -127,8 +106,6 @@ object Bench {
       System.err.println(s"[bench] bucketed setup failed: ${e.getMessage}")
     }
     def measure(): Seq[(String, Double, Boolean)] = names.map { name =>
-      spark.conf.set("spark.sql.shuffle.partitions",
-        shuffleByQuery.getOrElse(name, defaultShuffle.toString))
       try (name, timed(spark, name, sfDir), true)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
@@ -19,9 +20,9 @@ import scala.jdk.CollectionConverters._
   *    runs, each printed as `TIME <name> <sec>`.
   *  - `profile <names>`: warm-up, then one timed run with a listener;
   *    prints the execution shape as `PROFILE <name> wall=… jobs=… …`
-  *    and one `JOB` line per job. "Scheduling/barrier-bound" reads as
-  *    wall >> taskTime/cores with many jobs, "compute-bound" as
-  *    taskTime ≈ wall × cores.
+  *    and one `JOB` line per job, named by the action that owns it.
+  *    "Scheduling/barrier-bound" reads as wall >> taskTime/cores with
+  *    many jobs, "compute-bound" as taskTime ≈ wall × cores.
   *
   * Names are a comma list (or several arguments) of registered queries;
   * an unknown name fails before any run. */
@@ -35,7 +36,6 @@ object Tool {
     val names = sel.map(Bench.inOrder).getOrElse {
       require(cmd == "explain", s"$cmd needs query names; $usage")
       (Queries.benchNames ++ Queries.shipLineNames).distinct
-        .filter(SparkEntry.queries.contains)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Bench.envSession()
@@ -97,6 +97,7 @@ object Tool {
 
   private class Acc extends SparkListener {
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val executions = new ConcurrentHashMap[Long, String]
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val taskTimeMs = new AtomicLong
@@ -105,6 +106,11 @@ object Tool {
     val inputB = new AtomicLong
     val gcMs = new AtomicLong
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        executions.put(x.executionId, x.description)
+      case _ =>
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       stages.incrementAndGet()
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -137,11 +143,16 @@ object Tool {
       f" shufRead=${acc.shufReadB.get / 1e6}%.1fMB" +
       f" shufWrite=${acc.shufWriteB.get / 1e6}%.1fMB" +
       f" input=${acc.inputB.get / 1e6}%.1fMB")
-    // each job's start offset + call site: which action owns the job count
+    // each job's start offset + owner: the action of its SQL execution
+    // (AQE submits stage jobs from a pool thread, so their own call site
+    // names the pool, not the action); the stage name otherwise
     jobs.zipWithIndex.foreach { case (j, i) =>
-      val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
+      val owner = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(acc.executions.get(id.toLong)))
+        .orElse(j.stageInfos.lastOption.map(_.name)).getOrElse("?")
       println(f"JOB ${i + 1}%3d +${(j.time - startMs) / 1e3}%.2fs" +
-        f" stages=${j.stageInfos.size} $site")
+        f" stages=${j.stageInfos.size} $owner")
     }
   }
 }

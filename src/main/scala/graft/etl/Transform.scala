@@ -14,22 +14,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Transform {
 
-  /** P1 — flatten+enrich projection (users.js:16-35): synthesized id, name
-    * concat+trim, JS-falsy default coalescing, `valid` flag. Mapped onto the
-    * `customer` fixture (FIXTURES.md role mapping). */
-  def enrichCustomers(customer: DataFrame): DataFrame =
-    customer.select(
-      concat(lit("user-"), col("c_custkey")).as("id"),
-      trim(col("c_name")).as("name"),
-      jsCoalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"),
-      col("c_nationkey").as("nation_key"),
-      col("c_acctbal").as("acctbal"),
-      (col("c_acctbal") > 0).as("valid"))
-
-  /** F1 — validity filter (users.js:67): `valid && email` non-empty. */
-  def filterValid(enriched: DataFrame): DataFrame =
-    enriched.filter(col("valid") && col("segment") =!= "UNKNOWN")
-
   /** F5/J4 — point lookup by key with JS loose `==` string comparison
     * (pages/launch/[id].js:33). Pushdown-friendly: equality on a cast key. */
   def pointLookup(df: DataFrame, keyCol: String, key: String): DataFrame =

@@ -207,8 +207,4 @@ package object functions {
   def decSum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
 
-  /** Deterministic average built from [[decSum]] / count. */
-  def decAvg(c: Column, scale: Int = 2): Column =
-    (sum(c.cast(s"decimal(18,$scale)")) / count(c)).cast("double")
-
 }

@@ -639,16 +639,6 @@ object Dedup {
       math.log(n.toDouble / targetBucket) / math.log(2.0)).toInt)
   }
 
-  /** [[semanticDedup]] with `signPlanes` derived from the corpus count via
-    * [[semanticDedupPlanes]] — the form a pipeline calls (one cheap count,
-    * then the pinned-plane plan). The pinned-plane form exists so the
-    * DuckDB oracle can replay a static plan. */
-  def semanticDedupAuto(embeddings: DataFrame, minCosine: Double,
-                        targetBucket: Int = 4, radius: Int = 2,
-                        dim: Int = 64): DataFrame =
-    semanticDedup(embeddings, minCosine,
-      semanticDedupPlanes(embeddings.count(), targetBucket), radius, dim)
-
   /** The d9 sign signature: bit j = sign of the dot with Achlioptas
     * plane j of the shared pure-function matrix
     * `((131·i + 419·j + 73·i·j) mod 1021 mod 3) − 1` (the i·j cross term

@@ -23,8 +23,6 @@ import org.apache.spark.sql.SparkSession
   * session default, so at production scale (state rows >> 10⁶ × session
   * partitions) this is exactly the session default — the cap means the
   * setting can only shrink toward the data, never starve a big loop.
-  * `SPARK_GRAFT_LOOP_PARTS` overrides for operators teams that know their
-  * state volume better than the heuristic.
   *
   * [[withShuffleParts]] scopes the conf around the loop and restores the
   * session value after (the streaming replays' state-sizing discipline,
@@ -49,12 +47,7 @@ object LoopConf {
 
   def sizedParts(spark: SparkSession, stateRows: Long): Int = {
     val session = spark.sessionState.conf.numShufflePartitions
-    sys.env.get("SPARK_GRAFT_LOOP_PARTS").map { v =>
-      val n = v.toInt
-      require(n >= 1, s"SPARK_GRAFT_LOOP_PARTS must be >= 1, got $n")
-      n
-    }.getOrElse(
-      math.max(1L, math.min(stateRows / RowsPerPart + 1L, session.toLong)).toInt)
+    math.max(1L, math.min(stateRows / RowsPerPart + 1L, session.toLong)).toInt
   }
 
   /** CONCURRENCY CONTRACT (ADVICE r15): this mutates the session's

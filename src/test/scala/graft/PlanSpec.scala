@@ -72,18 +72,23 @@ class PlanSpec extends SparkTestBase {
 
   test("every registered query has either an oracle or a documented skip") {
     // the raw pair/neighbor lists of approximate operators are rows-only
-    // by design; each is twinned with a full-oracle gate (d2_minhash_gate,
-    // d6_lsh_gate, d6_production_gate, sim2_ann_gate, sim2_production_gate,
-    // sim3_ivf_gate, sim4_knn_gate, hn2_gate, pq2_adc_gate, pq3_batch_gate,
-    // bitext2_gate)
-    val rowsOnly = Set("a4_distinct_hll", "d2_dedup_minhash", "sim2_ann_lsh", "sim3_ann_ivf", "d6_neardup_lsh", "src1_users_api", "sim4_knn_graph",
-      "d6_production", "sim2_production", "hn2_production", "pq2_adc_search",
-      "pq2_production", "pq3_batch_join", "bitext2_production")
-    val missing = Queries.all.keySet -- Queries.oracles.keySet -- rowsOnly
-    assert(missing.isEmpty, s"queries without oracle or skip-list entry: $missing")
+    // by design; each names a full-oracle gate twin in the registry
+    val twins = Queries.registry.collect {
+      case Queries.QueryDef(name, _, Queries.GateTwin(gate), _, _) => name -> gate
+    }
+    val unchecked = twins.filterNot { case (_, gate) =>
+      Queries.all.contains(gate) && Queries.oracles.contains(gate)
+    }
+    assert(unchecked.isEmpty, s"gate twins that are not registered oracle queries: $unchecked")
+    val oracleRows = Queries.registry.count(_.check.isInstanceOf[Queries.Oracle])
+    assert((oracleRows, twins.size) == ((341, 12)), "oracle rows, rows-only rows")
   }
 
   test("oracle keys all reference registered queries") {
+    // a duplicated name would silently collapse to one key of `all`/`oracles`
+    val names = Queries.registry.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"names registered more than once: $dups")
     val orphans = Queries.oracles.keySet -- Queries.all.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
