@@ -1465,13 +1465,9 @@ object Queries {
       |JOIN sz na ON na.source = pr.source_a
       |JOIN sz nb ON nb.source = pr.source_b""".stripMargin
 
-  /** Embedding-cosine near-dup pairs (threshold tuned to fixture geometry).
-    * Pinned EXPLICITLY to the exact brute path: the oracle is an exact
-    * all-pairs scan, and the stats-adaptive [[Dedup.cosinePairs]] switch
-    * keys off `optimizedPlan.stats.sizeInBytes` — unknown-stats sources, a
-    * cache, or an estimator change could silently flip an oracle query to
-    * the approximate LSH subset. The adaptive entry point stays the
-    * production API (d6 covers its LSH arm; DedupSpec covers the switch). */
+  /** Embedding-cosine near-dup pairs (threshold tuned to fixture geometry)
+    * on the exact brute path, which the oracle's all-pairs scan replays;
+    * d6 runs the LSH path ([[Dedup.cosinePairsLshAuto]]). */
   val d5Cosine: Q = (s, d) => Dedup.cosinePairsBrute(Tables.embeddings(s, d), 0.35)
 
   val d5CosineSql: String =
@@ -1481,9 +1477,10 @@ object Queries {
       |WHERE floor((list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))) * 10000 + 0.5) / 10000 >= 0.35""".stripMargin
 
   /** The 100 TB near-dup path as a runnable query: multi-table LSH bucket
-    * candidates with the (radius, tables) config derived from the 0.2
-    * threshold by [[graft.operators.Similarity.lshPlan]] (boundary-pair
-    * collision math; asymmetric exactly-once probes), exactly rescored.
+    * candidates with the (planes, radius, tables) config derived from the
+    * 0.2 threshold and the corpus count by
+    * [[graft.operators.Similarity.lshAutoPlan]] (boundary-pair collision
+    * math; asymmetric exactly-once probes), exactly rescored.
     * The candidate set is approximate but its QUALITY is driver-checked
     * by [[d6Gate]]: zero false pairs, zero misses at ≥ 0.35, and ≥ 99.5%
     * recall at the 0.2 threshold (theoretical boundary-pair miss ≤ 5e-5;
@@ -7171,8 +7168,8 @@ object Queries {
   /** Z1 — Z-order layout rewrite on (custkey, totalprice): row content is
     * IDENTICAL to the source (which is exactly what the oracle checks —
     * layout ops must be invisible to semantics); the physical product is
-    * the two-dimensional file clustering the spec measures
-    * (LayoutSpec.meanExtent) and SCALE.md §layout explains. */
+    * the two-dimensional file clustering that LayoutSpec measures with
+    * [[graft.operators.Layout.meanExtent]] and SCALE.md §layout explains. */
   val z1Zorder: Q = (s, d) =>
     graft.operators.Layout.zorderBy(Tables.orders(s, d), "o_custkey", "o_totalprice")
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -7347,12 +7344,6 @@ object Queries {
       |       CAST(CASE WHEN doc_id % 2 = 0 THEN 33 ELSE 39 END AS BIGINT) AS byte_len
       |FROM documents""".stripMargin
 
-  /** MM2: REAL frame sampling — each doc carries a motion-sequence
-    * container (the concatenation of `1 + doc_id % 8` complete PNG
-    * streams, synthesized in-plan), demuxed at the PNG chunk level and
-    * sampled every 2nd frame ([[Multimodal.frameSample]]). The kept-frame
-    * count is pure arithmetic in doc_id, so DuckDB replays it without a
-    * codec. */
   /** MM2: REAL video demux — one MJPEG-in-RIFF (AVI) container per doc
     * ([[Multimodal.synthesizeAvis]]: avih/strh/strf headers + '00dc' JPEG
     * frames + idx1, every size field little-endian from the actual bytes),
@@ -10320,8 +10311,8 @@ object Queries {
 
   /** D9 — SemDeDup-style semantic dedup over embeddings
     * ([[graft.operators.Dedup.semanticDedup]]): O(1)-sized sign-projection
-    * buckets (planes sized by [[graft.operators.Dedup.semanticDedupPlanes]]
-    * — 7 planes for the 500-vector fixture at target bucket 4) →
+    * buckets (planes = ceil(log2(n / 4)): 7 for the 500-vector fixture
+    * at target bucket 4) →
     * hamming-≤2 multiprobe candidates (d6's asymmetric exactly-once mask
     * scheme) → exact cosine scoring → connected components → keep one
     * representative per cluster. Fully oracle-replayed: the Achlioptas

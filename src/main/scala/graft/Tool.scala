@@ -132,9 +132,7 @@ object Tool {
     spark.sparkContext.addSparkListener(acc)
     val wall = Bench.timed(spark, name, sfDir)
     val startMs = System.currentTimeMillis() - (wall * 1e3).toLong
-    // drain the listener bus (private API): poll until counters settle
-    var last = -1
-    while (acc.tasks.get != last) { last = acc.tasks.get; Thread.sleep(200) }
+    GraftStageInfoAccess.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(acc)
     val jobs = acc.jobs.asScala.toSeq
     println(f"PROFILE $name wall=$wall%.3f jobs=${jobs.size}" +

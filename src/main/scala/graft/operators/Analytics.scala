@@ -89,7 +89,7 @@ object Analytics {
     * grid (|types| × |days| rows, metadata-sized at any corpus scale) —
     * never raw events. A LOCF over raw-event-sized data would instead be
     * segmented (per-month carry + boundary join, see SCALE.md). */
-  def gapFillDaily(events: DataFrame): DataFrame = {
+  private[graft] def gapFillDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("day_value"))
     // bounds and the type list derive from the ALREADY-AGGREGATED daily
@@ -1038,7 +1038,7 @@ object Analytics {
     * ratios on the 1e-6 grid, same alarm-at-1 contract — and the
     * streaming cells replay THIS fold digit for digit as the watermark
     * seals each day. */
-  def cusumWarmup(events: DataFrame, warmDays: Int = 10): DataFrame = {
+  private[graft] def cusumWarmup(events: DataFrame, warmDays: Int = 10): DataFrame = {
     require(warmDays >= 1 && warmDays <= 10000,
       s"warmDays out of range: $warmDays")
     val daily = events

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     are scored (exact, but pruned);
   *   - the brute-force cosine pair scan is kept only because the fixture
   *     embedding table is dimension-table sized (≤2k rows — broadcastable);
-  *     the scale path is [[Similarity.annCandidates]].
+  *     the scale path is [[cosinePairsLshAuto]].
   */
 object Dedup {
 
@@ -212,29 +212,6 @@ object Dedup {
       .select(col("doc_id"), sim.as("simhash"))
   }
 
-  /** SimHash near-dup candidates: pairs whose simhashes agree on one of the
-    * four 8-bit bands (pigeonhole: hamming ≤ 3 ⇒ at least one exact band).
-    * Banded like LSH — shuffle join on (band, bits), no cross join. */
-  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sigs = simhash(documents)
-    val banded = sigs.select(col("doc_id"), col("simhash"),
-      posexplode(transform(sequence(lit(0), lit(3)),
-        b => (col("simhash") / pow(lit(256.0), b)).cast("long").bitwiseAND(255))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bits")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val hamming = {
-      val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
-      (0 until 32).map(j => shiftright(x, j).bitwiseAND(1)).reduce(_ + _)
-    }
-    a.join(b, col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** Exact n-gram Jaccard similarity, pruned through an inverted shingle
     * index: only pairs sharing ≥1 shingle are scored (identical result set
     * to all-pairs for any threshold > 0, at a fraction of the cost).
@@ -316,11 +293,9 @@ object Dedup {
     * ASYMMETRICALLY — corpus shingles are index-side, the (small)
     * incoming batch is the probe side, so candidate volume is batch ×
     * per-shingle postings, never corpus²; candidates carry ids +
-    * shingle hashes only. At mega-frequent-shingle corpora compose with
-    * [[ngramJaccardPairsPruned]]'s df cutoff on the index side; at
-    * corpus-dedup thresholds the banded-MinHash route (d6's
-    * `lshAutoPlan`) replaces the exact index, with this operator's
-    * output contract unchanged. */
+    * shingle hashes only. At corpus-dedup thresholds the banded-MinHash
+    * route (d6's `lshAutoPlan`) replaces the exact index, with this
+    * operator's output contract unchanged. */
   def nearDupAdmission(incoming: DataFrame, corpus: DataFrame, n: Int = 5,
                        minJaccard: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -357,44 +332,6 @@ object Dedup {
       .select(col("doc_id"), col("blocker_id").isNull.as("admitted"),
         col("blocker_id"), col("jaccard"))
       .orderBy(col("doc_id"))
-  }
-
-  /** [[ngramJaccardPairs]] with the stop-shingle escape valve for corpora
-    * with mega-frequent shingles ("the end of" appearing in every doc):
-    * shingles with document frequency above `dfCutoff` are dropped from the
-    * CANDIDATE-generation index — the inverted-index join's output is
-    * Σ df², so one shingle in n docs costs n²/2 candidate rows — and the
-    * surviving candidates are then rescored EXACTLY against the full
-    * shingle sets. Results equal [[ngramJaccardPairs]] for every pair that
-    * shares at least one sub-cutoff shingle; near-dup pairs always do
-    * (sharing most of their shingles), which the spec pins on a corpus
-    * where a mega-shingle alone would have produced the full cross square.
-    */
-  def ngramJaccardPairsPruned(documents: DataFrame, n: Int = 5,
-                              minJaccard: Double = 0.0,
-                              dfCutoff: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val full = documents.select(col("doc_id"),
-      explode(array_distinct(shingle_hashes(col("text"), n))).as("sg"))
-    val rare = full.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sg"))))
-      .filter(col("df") <= dfCutoff)
-    val cands = rare.alias("a")
-      .join(rare.alias("b"), col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    val sizes = full.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val fb = full.select(col("doc_id").as("fb_id"), col("sg").as("fb_sg"))
-    val inter = cands
-      .join(full.select(col("doc_id").as("a_id"), col("sg")), "a_id")
-      .join(fb, col("b_id") === col("fb_id") && col("sg") === col("fb_sg"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("na")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("nb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        portableRound(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")), 4).as("jaccard"))
-      .filter(col("jaccard") > minJaccard)
   }
 
   /** Corpus-level overlap audit: for every pair of sources, the Jaccard
@@ -550,34 +487,12 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** Embedding-cosine near-dup pairs — candidate source chosen from PLAN
-    * STATISTICS, the same way Spark picks broadcast vs shuffle joins:
-    * below `spark.graft.neardup.bruteMaxBytes` (default 32 MB ≈ 120k
-    * 64-dim float vectors) the exact blocked self-join runs; above it the
-    * pair source switches to banded LSH buckets
-    * ([[Similarity.annCandidates]], multi-table, hamming-≤2 multiprobe)
-    * and only bucket-mates are scored. Both paths share the exact scoring
-    * stage, so a pair that IS emitted always carries its true cosine.
-    *
-    * Why the small side stays brute (measured, not guessed): the fixture's
-    * qualifying pairs sit at cosine 0.35–0.51 — the 3σ tail of RANDOM
-    * 64-dim pairs, not near-dup clusters. At that similarity a hyperplane
-    * splits a pair with p ≈ 0.37–0.39, so any sign-LSH config with recall
-    * ~1.0 must union enough tables that its candidate set costs MORE than
-    * the n² scan it replaces (the math is in SCALE.md §near-dup). Corpus-
-    * scale near-dup thresholds (≥ 0.8, split-p ≤ 0.21) are where the LSH
-    * path prunes by orders of magnitude — and that is the regime the
-    * stats switch selects it for. */
-  def cosinePairs(embeddings: DataFrame, minCosine: Double): DataFrame = {
-    val conf = embeddings.sparkSession.conf
-    val bruteMax = BigInt(conf.get("spark.graft.neardup.bruteMaxBytes",
-      (32L * 1024 * 1024).toString).toLong)
-    val planBytes = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (planBytes <= bruteMax) cosinePairsBrute(embeddings, minCosine)
-    else cosinePairsLshAuto(embeddings, minCosine)
-  }
-
-  /** Exact all-pairs scoring (the small-corpus / oracle twin). */
+  /** Embedding-cosine near-dup pairs by exact all-pairs scoring: the
+    * small-corpus / oracle form (d5), the brute side broadcast. The
+    * fixture's qualifying pairs sit at cosine 0.35–0.51, the 3σ tail of
+    * RANDOM 64-dim pairs, where any sign-LSH config with recall ~1.0
+    * costs more than this scan (SCALE.md §near-dup); corpus-scale
+    * thresholds (≥ 0.8) call [[cosinePairsLshAuto]] instead. */
   def cosinePairsBrute(embeddings: DataFrame, minCosine: Double): DataFrame = {
     // norms computed once per vector, not per pair: the pair kernel drops
     // from 3 accumulations to one dot product. dot/(na*nb) with sequential
@@ -593,27 +508,15 @@ object Dedup {
       .filter(col("cosine") >= minCosine)
   }
 
-  /** The scale path: LSH bucket candidates, exactly rescored. Same output
-    * columns and scoring arithmetic as [[cosinePairsBrute]] (norms
-    * precomputed per vector, one dot product per pair); the result is a
-    * subset whose recall is set by the threshold-driven
-    * [[Similarity.lshPlan]] config — see the recall gate in DedupSpec and
-    * the d6 driver gate. */
-  def cosinePairsLsh(embeddings: DataFrame, minCosine: Double,
-                     planes: Int = 6, dim: Int = 64,
-                     targetRecall: Double = 0.9999): DataFrame =
-    Similarity.annCandidates(embeddings, minCosine, planes, dim, targetRecall)
-      .select(col("a_id"), col("b_id"),
-        portableRound(dot_product(col("ea"), col("eb")) /
-          (col("na") * col("nb")), 4).as("cosine"))
-      .filter(col("cosine") >= minCosine)
-
-  /** [[cosinePairsLsh]] with the whole `(planes, radius, tables)` config
-    * cost-ranked from the corpus count ([[Similarity.lshAutoPlan]]):
-    * log-scaled planes where bucketing pays (candidate work then scales
-    * with the corpus, not its square), the historical planes=6 where the
-    * threshold forces near-enumeration anyway. The pinned form above
-    * stays for specs/oracles that need a static plan. */
+  /** The scale path: LSH bucket candidates
+    * ([[Similarity.annCandidatesAuto]]), exactly rescored with the same
+    * output columns and arithmetic as [[cosinePairsBrute]], so an emitted
+    * pair always carries its true cosine. The `(planes, radius, tables)`
+    * config is cost-ranked from the corpus count
+    * ([[Similarity.lshAutoPlan]]) to reach `targetRecall` at the boundary
+    * pair: log-scaled planes where bucketing pays (candidate work then
+    * scales with the corpus, not its square), the historical planes=6
+    * where the threshold forces near-enumeration anyway. */
   def cosinePairsLshAuto(embeddings: DataFrame, minCosine: Double,
                          dim: Int = 64,
                          targetRecall: Double = 0.9999): DataFrame =
@@ -622,22 +525,6 @@ object Dedup {
         portableRound(dot_product(col("ea"), col("eb")) /
           (col("na") * col("nb")), 4).as("cosine"))
       .filter(col("cosine") >= minCosine)
-
-  /** Plane count that keeps the expected sign-bucket population at
-    * `targetBucket` = O(1): ceil(log2(n / targetBucket)), floored at 1.
-    * Bucket count then grows ∝ N, so within-bucket pair work is
-    * ~N · (targetBucket − 1)/2 per probe — LINEAR in the corpus — and the
-    * probe fan-out is C(planes, ≤radius) = polylog(N). The earlier sizing
-    * (~log2(√N) planes → √N-sized buckets) made pair work
-    * √N · C(√N, 2) ≈ N^1.5/2 — ~10^15 candidate pairs at the 10^10-vector
-    * scale model, which is the wrong shape; pinned by DedupSpec's
-    * per-bucket pair-volume assertion. */
-  def semanticDedupPlanes(n: Long, targetBucket: Int = 4): Int = {
-    require(n > 0, s"corpus size: $n")
-    require(targetBucket >= 1, s"targetBucket: $targetBucket")
-    math.max(1, math.ceil(
-      math.log(n.toDouble / targetBucket) / math.log(2.0)).toInt)
-  }
 
   /** The d9 sign signature: bit j = sign of the dot with Achlioptas
     * plane j of the shared pure-function matrix
@@ -687,7 +574,7 @@ object Dedup {
     * the paper's k-means partitioner is sim3's machinery and equally
     * pluggable, but not oracle-replayable). Candidate pairs are vectors
     * whose signatures differ in ≤ `radius` bits, generated by d6's
-    * ASYMMETRIC exactly-once mask scheme ([[Similarity.annCandidates]]):
+    * ASYMMETRIC exactly-once mask scheme ([[Similarity.annCandidatesAuto]]):
     * the index side emits one bare signature per vector, the probe side
     * emits sig XOR mask for every mask of popcount ≤ radius, and the join
     * keeps index.vec_id < probe.vec_id — each qualifying pair meets on
@@ -695,7 +582,7 @@ object Dedup {
     * needed. Pairs are scored exactly with the d5 kernel and clustered by
     * the d7 large-star/small-star CC.
     *
-    * Scale: size `signPlanes` with [[semanticDedupPlanes]] so the expected
+    * Scale: size `signPlanes` as ceil(log2(n / 4)) so the expected
     * bucket population is O(1) — bucket count ∝ N keeps candidate-pair
     * work LINEAR in the corpus, and the hamming-≤radius multiprobe
     * (C(planes, ≤radius) masks, polylog fan-out) recovers the recall that

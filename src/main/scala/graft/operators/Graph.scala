@@ -516,32 +516,6 @@ object Graph {
       .orderBy(col("phase"), col("community"))
   }
 
-  /** One synchronous WEIGHTED Louvain move round over an edge list
-    * `(a, b, w)` that may carry self-loops (a = b) — the [[louvainMove]]
-    * gain arithmetic generalized to the coarsened graph, where an edge's
-    * weight is an inter-community edge COUNT and a self-loop holds a
-    * community's internal count. Everything stays in integer space:
-    * k_vc = Σ w of v's edges into community c (self-loops excluded — they
-    * move with v and cancel in the gain), k_v = Σ w over neighbors +
-    * 2·w_self, d_c = Σ k_v, m = Σ w (each undirected edge once,
-    * self-loops once), gain·4m² = 4m·(k_vB − k_vA\v) − 2·k_v·(d_B − d_A
-    * + k_v). With w ≡ 1 and no self-loops this is exactly
-    * [[louvainMove]]'s round.
-    *
-    * Synchronous singleton-swap guard (Lu, Halappanavar & Kalyanaraman
-    * 2015 §4.1, the parallel-Louvain minimum-labeling heuristic): two
-    * adjacent singletons would otherwise adopt each other's label in the
-    * same synchronous sweep forever (u→{v}, v→{u} — a livelock the
-    * sequential scan never sees). A vertex in a singleton community may
-    * move to another singleton community only toward the SMALLER label,
-    * so exactly one side of every would-be swap moves and the pair
-    * merges. */
-  private[operators] def weightedMoveRound(communities: DataFrame,
-                                           wedges: DataFrame): DataFrame = {
-    val (nbrs, kv, mDf) = moveRoundInvariants(wedges)
-    weightedMoveRoundOn(communities, nbrs, kv, mDf)
-  }
-
   /** The label-independent inputs of a move round — neighbor lists,
     * weighted degrees (2·w per self-loop), total edge mass. Computed
     * once per graph LEVEL and reused across rounds (degrees never change
@@ -563,6 +537,27 @@ object Graph {
     (nbrs, kv, mDf)
   }
 
+  /** One synchronous WEIGHTED Louvain move round over the
+    * [[moveRoundInvariants]] of an edge list `(a, b, w)` that may carry
+    * self-loops (a = b) — the [[louvainMove]] gain arithmetic
+    * generalized to the coarsened graph, where an edge's
+    * weight is an inter-community edge COUNT and a self-loop holds a
+    * community's internal count. Everything stays in integer space:
+    * k_vc = Σ w of v's edges into community c (self-loops excluded — they
+    * move with v and cancel in the gain), k_v = Σ w over neighbors +
+    * 2·w_self, d_c = Σ k_v, m = Σ w (each undirected edge once,
+    * self-loops once), gain·4m² = 4m·(k_vB − k_vA\v) − 2·k_v·(d_B − d_A
+    * + k_v). With w ≡ 1 and no self-loops this is exactly
+    * [[louvainMove]]'s round.
+    *
+    * Synchronous singleton-swap guard (Lu, Halappanavar & Kalyanaraman
+    * 2015 §4.1, the parallel-Louvain minimum-labeling heuristic): two
+    * adjacent singletons would otherwise adopt each other's label in the
+    * same synchronous sweep forever (u→{v}, v→{u} — a livelock the
+    * sequential scan never sees). A vertex in a singleton community may
+    * move to another singleton community only toward the SMALLER label,
+    * so exactly one side of every would-be swap moves and the pair
+    * merges. */
   private def weightedMoveRoundOn(communities: DataFrame, nbrs: DataFrame,
                                   kv: DataFrame, mDf: DataFrame): DataFrame = {
     val lbl = communities.select(col("node"), col("community"))

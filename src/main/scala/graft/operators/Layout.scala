@@ -204,7 +204,7 @@ object Layout {
     * column, as a fraction of its global extent — the stand-in for file
     * footer min/max stats. Mean extent ≈ 1/√P for a z-ordered 2-dim
     * layout vs ≈ 1 for an unclustered one. */
-  def meanExtent(df: DataFrame, c: String): Double = {
+  private[graft] def meanExtent(df: DataFrame, c: String): Double = {
     val parts = df
       .select(spark_partition_id().as("p"), col(c).cast("double").as("v"))
       .groupBy(col("p")).agg(min("v").as("lo"), max("v").as("hi"))

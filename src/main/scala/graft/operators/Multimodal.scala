@@ -169,27 +169,6 @@ object Multimodal {
     }.toDF()
   }
 
-  /** Deterministic "video" fixture: a motion sequence container = the raw
-    * concatenation of `1 + id % framesMod` complete PNG streams (frame f of
-    * doc id varies by the pixel function's frameIdx term). Concatenated-PNG
-    * is a real, demuxable container: frame boundaries are recovered from
-    * the bytes alone by signature scan ([[frameSample]]). */
-  def synthesizePngSequence(spark: SparkSession, ids: DataFrame,
-                            framesMod: Int = 8, frameDim: Int = 8): DataFrame = {
-    import spark.implicits._
-    ids.select(col("doc_id")).as[Long].mapPartitions { rows =>
-      rows.map { id =>
-        val n = 1 + (id % framesMod).toInt
-        val bos = new java.io.ByteArrayOutputStream()
-        var f = 0
-        while (f < n) {
-          bos.write(synthesizePng(id, f, frameDim, frameDim)); f += 1
-        }
-        MediaRow(id, bos.toByteArray)
-      }
-    }.toDF()
-  }
-
   /** REAL image resize: decode → scale → re-encode through `javax.imageio`,
     * partition-parallel (codec state and colour models amortize per
     * partition, the mapPartitions batch shape). Aspect-preserving integer
@@ -225,56 +204,6 @@ object Multimodal {
             Some(ResizedMedia(r.doc_id, bytes, bytes.length))
           }
         }
-      }
-  }
-
-  /** REAL frame sampling over a concatenated-PNG sequence: demux at the
-    * PNG chunk level — verify each frame's 8-byte signature, then walk its
-    * chunks (be32 length + tag + data + CRC) to IEND; the next frame starts
-    * right after IEND's CRC. Chunk walking (not signature scanning) makes
-    * the boundaries exact even if signature bytes occur inside compressed
-    * IDAT data. Keep every k-th frame by its ORIGINAL index, emit one typed
-    * row per kept frame (explode shape: rows multiply). Every emitted slice
-    * is a complete PNG stream — downstream [[decodeImages]]/[[resize]]
-    * consume them directly. A malformed tail stops the demux for that doc
-    * (quarantine-style: well-formed prefix frames still come out). */
-  def frameSample(spark: SparkSession, media: DataFrame,
-                  everyK: Int): Dataset[Frame] = {
-    import spark.implicits._
-    val sig = Array[Byte](0x89.toByte, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .flatMap { r =>
-        val p = r.payload
-        def u8(i: Int): Int = p(i) & 0xff
-        def be32(i: Int): Int =
-          (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-        def sigAt(i: Int): Boolean =
-          i + sig.length <= p.length && sig.indices.forall(j => p(i + j) == sig(j))
-        val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-        var i = 0
-        var ok = true
-        while (ok && i < p.length) {
-          if (!sigAt(i)) ok = false
-          else {
-            var j = i + sig.length
-            var end = -1
-            while (end < 0 && j + 8 <= p.length) {
-              val len = be32(j)
-              val isEnd = p(j + 4) == 'I' && p(j + 5) == 'E' &&
-                p(j + 6) == 'N' && p(j + 7) == 'D'
-              j += 8 + len + 4 // length + tag + data + CRC
-              if (isEnd) end = j
-            }
-            if (end > 0 && end <= p.length) { frames += ((i, end)); i = end }
-            else ok = false
-          }
-        }
-        frames.zipWithIndex
-          .filter { case (_, i) => i % everyK == 0 }
-          .map { case ((s0, e0), i) =>
-            val bytes = java.util.Arrays.copyOfRange(p, s0, e0)
-            Frame(r.doc_id, i, bytes.length, bytes)
-          }
       }
   }
 

@@ -31,7 +31,7 @@ object Windows {
   /** Lag-based sessionization — the portable formulation (lag → gap flag →
     * running session id). Used by the spec to cross-check [[sessions]] and
     * by the DuckDB oracle, which has no session_window. */
-  def sessionsViaLag(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  private[graft] def sessionsViaLag(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"))
     // microsecond-precision gap compare: casting ts to long truncates to
     // seconds and disagrees with session_window on sub-second boundaries

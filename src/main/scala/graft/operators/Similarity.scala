@@ -20,16 +20,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Similarity {
 
-  /** Sign-random-projection signature: `planes`-bit int per vector, via the
-    * codegen'd [[graft.functions.HyperplaneSignature]] expression (weights
-    * precomputed, deterministic across runs/cluster sizes; table 0 is
-    * bit-compatible with the round-1 higher-order-function formulation,
-    * which was CodegenFallback and ~2 hash calls per element per row). */
-  def withLshSignature(embeddings: DataFrame, planes: Int = 6, dim: Int = 64,
-                       table: Int = 0): DataFrame =
-    embeddings.withColumn("lsh_sig",
-      hyperplane_signature(col("embedding"), planes, dim, table))
-
   /** Hard-negative mining for contrastive training data: per anchor, the
     * top-k most similar candidates INSIDE the cosine band `[loCos, hiCos)`
     * — similar enough to be informative negatives, strictly below the
@@ -508,7 +498,7 @@ object Similarity {
 
   /** Plane count that keeps the expected LSH bucket population at
     * `targetBucket` = O(1): max(6, ceil(log2(n / targetBucket))) — the
-    * same corpus-adaptive law as d9's `semanticDedupPlanes`, floored at
+    * same corpus-adaptive law as d9's sign planes, floored at
     * the historical 6 so fixture-scale behavior (and every driver gate,
     * which runs at sf0.01 where n ≤ 500) is unchanged. A FIXED plane
     * count is a silent quadratic: 2^planes buckets hold n/2^planes
@@ -521,67 +511,36 @@ object Similarity {
       math.log(n.toDouble / targetBucket) / math.log(2.0)).toInt)
   }
 
-  /** Pick the cheapest `(radius, tables)` LSH config that reaches
-    * `targetRecall` for a pair at exactly `minCosine` (every pair above
-    * the threshold collides more often, so the boundary pair is the
-    * worst case). The math is the classic sign-LSH collision model: a
-    * random hyperplane splits a pair at angle θ with p = θ/π, so a
-    * boundary pair lands within hamming `r` of itself in one table with
-    * p_hit = Σ_{k≤r} C(planes,k) p^k (1-p)^(planes-k), and the miss rate
-    * compounds as (1-p_hit)^tables. Cost is ranked by expected RANDOM
-    * candidate volume per pair — tables × Σ_{k≤r} C(planes,k) / 2^planes
-    * (an orthogonal pair collides on any given bit with p = 1/2) —
-    * because at 100 TB the candidate join output is the dominant byte
-    * stream, not the probe fan-out. `radius = planes` is excluded: that
-    * config enumerates every pair once (brute force by hash join) — if
-    * nothing cheaper reaches the target, the honest answer is the brute
-    * path, which is exactly what [[graft.operators.Dedup.cosinePairs]]'s
-    * stats switch decides. */
-  def lshPlan(minCosine: Double, planes: Int = 6,
-              targetRecall: Double = 0.9999): (Int, Int) = {
-    val pDiff = math.acos(math.max(-1.0, math.min(1.0, minCosine))) / math.Pi
-    def choose(n: Int, k: Int): Double =
-      (0 until k).map(i => (n - i).toDouble / (i + 1)).product
-    val configs = (0 until planes).flatMap { r =>
-      val pHit = (0 to r).map(k =>
-        choose(planes, k) * math.pow(pDiff, k) *
-          math.pow(1 - pDiff, planes - k)).sum
-      if (pHit <= 0.0 || pHit >= 1.0) None
-      else {
-        val tables = math.max(1, math.ceil(
-          math.log1p(-targetRecall) / math.log1p(-pHit)).toInt)
-        val randFrac = (0 to r).map(choose(planes, _)).sum / (1 << planes)
-        val miss = math.pow(1 - pHit, tables)
-        Some((r, tables, tables * randFrac, miss))
-      }
-    }
-    require(configs.nonEmpty, s"no LSH config for minCosine=$minCosine")
-    // cost ties happen (ceil quantizes `tables`); prefer the config whose
-    // overshoot buys more recall, then the one with fewer tables (less
-    // probe fan-out and fewer signature computations per vector)
-    val best = configs.minBy(c => (c._3, c._4, c._2))
-    (best._1, best._2)
-  }
-
   /** Corpus-size-aware LSH plan: pick `(planes, radius, tables)` jointly by
     * minimizing the MODELED row volume of the whole candidate stage —
     * `tables × (|masks| × n  +  randFrac × n²/2)`, probe stream plus
-    * expected random-collision candidates — subject to [[lshPlan]]'s
-    * recall constraint at each plane count.
+    * expected random-collision candidates — subject to a recall
+    * constraint at each plane count.
+    *
+    * The constraint is the classic sign-LSH collision model at the
+    * boundary pair (every pair above `minCosine` collides more often, so
+    * the pair at exactly `minCosine` is the worst case): a random
+    * hyperplane splits a pair at angle θ with p = θ/π, so the pair lands
+    * within hamming `r` of itself in one table with
+    * p_hit = Σ_{k≤r} C(planes,k) p^k (1-p)^(planes-k), the miss rate
+    * compounds as (1-p_hit)^tables, and `tables` is the least count with
+    * 1 − (1 − p_hit)^tables ≥ `targetRecall`. `radius = planes` is
+    * excluded: that config enumerates every pair once (brute force by
+    * hash join).
     *
     * Why planes must be chosen, not pinned: a fixed plane count is a
     * silent quadratic (2^planes buckets hold n/2^planes vectors, so
     * collision volume grows n²/2^planes — measured at 185× wall clock for
     * 10× corpus on the sfx10 run, SCALE.md §sf1). But unconditionally
     * taking planes to log2(n) is wrong too: in the low-threshold
-    * enumeration regime lshPlan must pick radius ≈ planes−1 to hold
+    * enumeration regime the plan must take radius ≈ planes−1 to hold
     * recall, and the probe-mask fan-out Σ C(planes, ≤r) then grows
     * EXPONENTIALLY with planes (observed: a 4095-mask explode at
     * planes=12 OOM'd a broadcast). Ranking total modeled rows picks log-
     * scaled planes exactly when bucketing pays (high thresholds) and
     * falls back to the historical planes=6 when it cannot (low
     * thresholds, where the honest answer is the brute path anyway —
-    * [[graft.operators.Dedup.cosinePairs]]'s stats switch). The floor of
+    * [[graft.operators.Dedup.cosinePairsBrute]]). The floor of
     * 6 keeps every fixture-scale plan (n ≤ 2000: driver gates, specs)
     * inside the historical search space. */
   def lshAutoPlan(n: Long, minCosine: Double,
@@ -638,39 +597,30 @@ object Similarity {
       }
     }
     // degenerate thresholds (±1.0 → pDiff 0 or 1) make every config's
-    // pHit hit the 0/1 guard — mirror lshPlan's clear failure instead of
-    // an anonymous empty.minBy
+    // pHit hit the 0/1 guard — fail clearly instead of with an anonymous
+    // empty.minBy
     require(candidates.nonEmpty, s"no LSH config for minCosine=$minCosine")
     candidates.minBy { case ((planes, _, tables), cost) => (cost, planes, tables) }._1
   }
 
-  /** Candidate pairs from multi-table LSH buckets, hamming-≤radius
-    * multiprobe, with `(radius, tables)` derived from the threshold by
-    * [[lshPlan]]. The probe scheme is ASYMMETRIC and meets each pair
-    * exactly once per table: the index side emits one bare signature per
-    * (vector, table); the probe side emits `sig XOR mask` for every mask
-    * of popcount ≤ radius; the join keeps `index.vec_id < probe.vec_id`.
-    * A pair at hamming h ≤ radius then matches on exactly one mask (the
-    * XOR of its two signatures) in exactly one direction — unlike the
-    * both-sides-flip scheme, which meets the same pair in up to
-    * 2·radius+… buckets per table and multiplies the join output by the
-    * duplication factor before `distinct()` can cut it.
+  /** The candidate generator of [[annCandidatesAuto]] at an explicit
+    * `(planes, radius, tables)` (SimilaritySpec pins one to show what a
+    * fixed plane count costs). The probe scheme is ASYMMETRIC and meets
+    * each pair exactly once per table: the index side emits one bare
+    * signature per (vector, table); the probe side emits `sig XOR mask`
+    * for every mask of popcount ≤ radius; the join keeps
+    * `index.vec_id < probe.vec_id`. A pair at hamming h ≤ radius then
+    * matches on exactly one mask (the XOR of its two signatures) in
+    * exactly one direction — unlike the both-sides-flip scheme, which
+    * meets the same pair in up to 2·radius+… buckets per table and
+    * multiplies the join output by the duplication factor before
+    * `distinct()` can cut it.
     *
     * Shuffle discipline (the 100 TB constraint): both join inputs carry
     * ONLY (vec_id, tbl, sig) — 3 scalars. Ids are deduped first;
     * embeddings re-join exactly once per side for scoring, with their
     * norms precomputed so the scorer does ONE dot product per pair. */
-  def annCandidates(embeddings: DataFrame, minCosine: Double,
-                    planes: Int = 6, dim: Int = 64,
-                    targetRecall: Double = 0.999): DataFrame = {
-    val (radius, tables) = lshPlan(minCosine, planes, targetRecall)
-    annCandidatesWith(embeddings, planes, radius, tables, dim)
-  }
-
-  /** The candidate generator at an explicit `(planes, radius, tables)` —
-    * the shared core of the threshold-derived ([[annCandidates]]) and
-    * corpus-aware ([[annCandidatesAuto]]) forms. */
-  private def annCandidatesWith(embeddings: DataFrame, planes: Int,
+  private[operators] def annCandidatesWith(embeddings: DataFrame, planes: Int,
                                 radius: Int, tables: Int,
                                 dim: Int): DataFrame = {
     // one multi-table kernel + posexplode — NOT an array of per-table
@@ -700,11 +650,10 @@ object Similarity {
         col("b_id"), col("eb"), col("nb"))
   }
 
-  /** [[annCandidates]] with the whole `(planes, radius, tables)` config
-    * derived from the corpus count via [[lshAutoPlan]] — the form a
-    * pipeline calls (one cheap count, then the cost-ranked plan); the
-    * pinned-planes form remains for specs and oracle replays that need a
-    * static plan. */
+  /** Candidate pairs from multi-table LSH buckets, hamming-≤radius
+    * multiprobe, with the whole `(planes, radius, tables)` config derived
+    * from the threshold and the corpus count by [[lshAutoPlan]] (one
+    * cheap count, then the cost-ranked plan). */
   def annCandidatesAuto(embeddings: DataFrame, minCosine: Double,
                         dim: Int = 64,
                         targetRecall: Double = 0.999): DataFrame = {

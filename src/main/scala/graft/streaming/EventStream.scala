@@ -39,23 +39,17 @@ object EventStream {
     * DERIVED, not constant (round-16: the round-15 constant-4 default was
     * fixture-tuned — VERDICT r15 item 3/7): one partition per
     * million candidate state rows, floored at 1 and CAPPED at the session
-    * default — LoopConf.sizedParts' discipline with a stream-specific
-    * override env. `stateRows` is an upper bound on the replay's state
-    * keys (its input row count, a free parquet-footer/agg readout at
-    * every call site), so a production deployment whose stream carries
+    * default — LoopConf.sizedParts' discipline. `stateRows` is an upper
+    * bound on the replay's state keys (its input row count, a free
+    * parquet-footer/agg readout at every call site), so a production deployment whose stream carries
     * 10⁹+ keys runs at exactly its session default, while the fixture
     * replays stop paying 32 state-store instances of load+commit I/O per
     * micro-batch for a few thousand keys. */
   private[streaming] def statePartitions(spark: SparkSession,
-                                         stateRows: Long): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").map { v =>
-      val n = v.toInt
-      require(n >= 1, s"SPARK_GRAFT_STREAM_STATE_PARTS must be >= 1, got $n")
-      n
-    }.getOrElse {
-      val session = spark.sessionState.conf.numShufflePartitions
-      math.max(1L, math.min(stateRows / 1000000L + 1L, session.toLong)).toInt
-    }
+                                         stateRows: Long): Int = {
+    val session = spark.sessionState.conf.numShufflePartitions
+    math.max(1L, math.min(stateRows / 1000000L + 1L, session.toLong)).toInt
+  }
 
   /** Upper bound on a fixture replay's state keys: the events file's
     * row count, straight from the parquet footer (no job). */

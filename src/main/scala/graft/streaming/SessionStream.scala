@@ -143,7 +143,7 @@ object SessionStream {
     * in-memory map per partition). Changelog checkpointing keeps commit
     * cost proportional to the delta, not the store size. Takes effect for
     * queries STARTED after the call. */
-  def useRocksDbStateStore(spark: SparkSession): Unit = {
+  private[graft] def useRocksDbStateStore(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(

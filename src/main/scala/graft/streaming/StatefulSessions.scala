@@ -3,38 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Custom streaming state via `flatMapGroupsWithState`: per-user running
-  * totals that survive across micro-batches — the engine's stateful-operator
+/** Custom streaming state via `flatMapGroupsWithState`: per-key state
+  * that survives across micro-batches — the engine's stateful-operator
   * surface (SURVEY.md §2.9 extension; no analogue exists in the reference).
   *
-  * State is bounded per key (two numbers), so a 1000-executor cluster holds
-  * total state O(distinct users), partitioned by the grouping key — the
-  * shape that scales; unbounded per-key buffers would not.
+  * Each operator's state is bounded per key, so a 1000-executor cluster
+  * holds total state O(distinct keys), partitioned by the grouping key —
+  * the shape that scales; unbounded per-key buffers would not.
   */
 object StatefulSessions {
-
-  final case class UserEvent(user_id: Long, event_type: String, value: Double)
-  final case class UserTotals(user_id: Long, n_events: Long, sum_value: Double)
-
-  def updateTotals(
-      userId: Long, events: Iterator[UserEvent],
-      state: GroupState[UserTotals]): Iterator[UserTotals] = {
-    val prev = state.getOption.getOrElse(UserTotals(userId, 0L, 0.0))
-    var n = prev.n_events
-    var s = prev.sum_value
-    events.foreach { e => n += 1; s += e.value }
-    val next = UserTotals(userId, n, s)
-    state.update(next)
-    Iterator.single(next)
-  }
-
-  /** Wire the stateful transformation over a (possibly streaming) Dataset.
-    * Emits the updated running totals of every user seen in the batch. */
-  def runningTotals(spark: SparkSession, events: Dataset[UserEvent]): Dataset[UserTotals] = {
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(updateTotals)
-  }
 
   final case class TypedEvent(user_id: Long, event_id: Long,
                               ts_micros: Long, event_type: String)

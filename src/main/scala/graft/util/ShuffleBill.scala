@@ -22,10 +22,9 @@ import org.apache.spark.sql.SparkSession
   * broadcast's cost is its (bounded, asserted-elsewhere) build side. */
 object ShuffleBill {
   /** Run `body` and return the number of distinct shuffles its jobs
-    * submitted map stages for. The listener bus is asynchronous and its
-    * public API has no drain hook, so after `body` returns the count is
-    * polled to stability (two consecutive 100 ms reads with no growth —
-    * all jobs have completed by then, only event delivery can lag). */
+    * submitted map stages for. All jobs have completed when `body`
+    * returns; only event delivery can lag, so the listener bus is
+    * drained before the count is read. */
   def measure(spark: SparkSession)(body: => Unit): Int = {
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
@@ -35,13 +34,7 @@ object ShuffleBill {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      var last = -1
-      var stable = 0
-      while (stable < 2) {
-        if (ids.size == last) stable += 1
-        else { stable = 0; last = ids.size }
-        if (stable < 2) Thread.sleep(100)
-      }
+      GraftStageInfoAccess.drainListenerBus(spark.sparkContext)
       ids.size
     } finally spark.sparkContext.removeSparkListener(listener)
   }

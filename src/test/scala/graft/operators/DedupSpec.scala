@@ -199,15 +199,6 @@ class DedupSpec extends SparkTestBase {
     assert(hamming(sig(1L), sig(3L)) < hamming(sig(1L), sig(4L)))
   }
 
-  test("simhashPairs surfaces the duplicate pair via banding") {
-    val d = docsDF(
-      1L -> "the quick brown fox jumps over the lazy dog",
-      2L -> "the quick brown fox jumps over the lazy dog",
-      3L -> "totally unrelated content words only")
-    val got = Dedup.simhashPairs(d).collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.contains((1L, 2L)))
-  }
-
   test("ngram Jaccard: known overlap computes the exact coefficient") {
     // shingle sets: {a b c, b c d} vs {b c d, c d e} → inter 1, union 3
     val d = docsDF(1L -> "a b c d", 2L -> "b c d e")
@@ -297,69 +288,13 @@ class DedupSpec extends SparkTestBase {
     assert(rounds <= 4, s"star graph should collapse in O(1) rounds, got $rounds")
   }
 
-  test("df-cutoff prunes mega-frequent shingles but rescoring stays exact") {
-    // every doc shares the mega-shingle "the common tail"; without a cutoff
-    // the inverted index pairs ALL docs through it. The near-dup pair also
-    // shares rare shingles, so it survives pruning with its exact score.
-    val tail = "the common tail"
-    val docs = docsDF(
-      1L -> s"alpha beta gamma delta $tail",
-      2L -> s"alpha beta gamma epsilon $tail",
-      3L -> s"zeta eta theta iota $tail",
-      4L -> s"kappa lambda mu nu $tail")
-    val exact = Dedup.ngramJaccardPairs(docs, 3, 0.2)
-    val pruned = Dedup.ngramJaccardPairsPruned(docs, 3, 0.2, dfCutoff = 2)
-    assertSameRows(exact, pruned)
-    // and the pruned candidate space really shrank: at threshold 0 the
-    // unpruned index emits every doc pair (mega-shingle square), the
-    // pruned one only pairs sharing a rare shingle
-    assert(Dedup.ngramJaccardPairs(docs, 3, 0.0).count() == 6)
-    assert(Dedup.ngramJaccardPairsPruned(docs, 3, 0.0, dfCutoff = 2).count() == 1)
-  }
-
   test("LSH pair source reproduces the brute-force d5 result exactly at 0.35") {
-    // the scale path's recall contract at the d5 threshold: the lshPlan
-    // config covers every qualifying pair on the fixture (measured across
-    // sf0.001/0.01/0.1), and rescoring is exact — so the two paths are
-    // row-identical, not merely close
+    // the scale path's recall contract at the d5 threshold: the
+    // lshAutoPlan config covers every qualifying pair on the fixture, and
+    // rescoring is exact — so the two paths are row-identical, not
+    // merely close
     val e = graft.Tables.embeddings(spark, sf0001)
-    assertSameRows(Dedup.cosinePairsLsh(e, 0.35), Dedup.cosinePairsBrute(e, 0.35))
-  }
-
-  test("cosinePairs switches to the LSH source above the stats threshold") {
-    val e = graft.Tables.embeddings(spark, sf0001)
-    val brutePlan = Dedup.cosinePairs(e, 0.35).queryExecution.executedPlan.toString
-    assert(brutePlan.contains("BroadcastNestedLoopJoin"), "small side should stay brute")
-    spark.conf.set("spark.graft.neardup.bruteMaxBytes", "0")
-    try {
-      val lshPlan = Dedup.cosinePairs(e, 0.35).queryExecution.executedPlan.toString
-      assert(!lshPlan.contains("BroadcastNestedLoopJoin"),
-        "above the threshold the all-pairs join must be gone")
-    } finally spark.conf.unset("spark.graft.neardup.bruteMaxBytes")
-  }
-
-  test("cosinePairs boundary is exact: planBytes <= bruteMaxBytes is brute, one past is LSH") {
-    // the documented switch law on the REAL fixture estimate, not the
-    // degenerate bruteMaxBytes=0: at exactly the corpus's estimated plan
-    // bytes the brute arm runs, one byte below it the LSH arm runs — so
-    // the 32 MB default (~120k 64-dim float vectors) is a real boundary,
-    // not a dead conf
-    val e = graft.Tables.embeddings(spark, sf0001)
-    val est = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(est > 1, s"fixture estimate should be real, got $est")
-    def planAt(maxBytes: BigInt): String = {
-      spark.conf.set("spark.graft.neardup.bruteMaxBytes", maxBytes.toString)
-      try Dedup.cosinePairs(e, 0.35).queryExecution.executedPlan.toString
-      finally spark.conf.unset("spark.graft.neardup.bruteMaxBytes")
-    }
-    val atBoundary = planAt(est)
-    assert(atBoundary.contains("BroadcastNestedLoopJoin"),
-      "planBytes == bruteMaxBytes must stay on the brute arm")
-    val pastBoundary = planAt(est - 1)
-    assert(!pastBoundary.contains("BroadcastNestedLoopJoin"),
-      "planBytes > bruteMaxBytes must route to the LSH arm")
-    assert(pastBoundary.contains("Generate"),
-      "the LSH arm is recognizable by its probe-mask explode")
+    assertSameRows(Dedup.cosinePairsLshAuto(e, 0.35), Dedup.cosinePairsBrute(e, 0.35))
   }
 
   test("cosine near-dup pairs on crafted vectors") {
@@ -367,29 +302,13 @@ class DedupSpec extends SparkTestBase {
     val e = Seq(
       mk(1L, Array(1f, 0f, 0f)), mk(2L, Array(0.99f, 0.1f, 0f)), mk(3L, Array(0f, 1f, 0f)))
       .toDF("vec_id", "embedding")
-    val got = Dedup.cosinePairs(e, 0.9).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val got = Dedup.cosinePairsBrute(e, 0.9).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 2L)))
-  }
-
-  test("semanticDedupPlanes keeps expected bucket population O(1) at any corpus scale") {
-    // the scale law: 2^planes >= n/target (expected bucket <= target) and
-    // planes is minimal (one fewer plane would overshoot the target) —
-    // so bucket count grows ∝ N and per-bucket pair work stays O(target²)
-    // at 10^10 vectors just as at 500, the fix for the round-4 √N-bucket
-    // sizing whose pair work was N^1.5
-    for (n <- Seq(500L, 1000000L, 1000000000L, 10000000000L); c <- Seq(4, 16)) {
-      val p = Dedup.semanticDedupPlanes(n, c)
-      val expected = n.toDouble / math.pow(2.0, p)
-      assert(expected <= c, s"n=$n target=$c planes=$p expected bucket $expected")
-      assert(p == 1 || n.toDouble / math.pow(2.0, p - 1) > c,
-        s"n=$n target=$c planes=$p is not minimal")
-    }
-    assert(Dedup.semanticDedupPlanes(500, 4) == 7) // the pinned d9 oracle config
   }
 
   test("d9 buckets are O(1)-sized on the fixture and candidates are exactly-once") {
     val e = graft.Tables.embeddings(spark, sf0001) // 500 vectors
-    val planes = Dedup.semanticDedupPlanes(500, 4)
+    val planes = 7 // d9's config: ceil(log2(500 / 4)), target bucket 4
     val sizes = e.select(Dedup.signSignature(planes, 64).as("sig"))
       .groupBy("sig").count().select(col("count")).as[Long].collect()
     // max per-bucket population — and therefore per-bucket pair work —

@@ -60,32 +60,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(Multimodal.resize(spark, bad, maxDim = 16).collect().isEmpty)
   }
 
-  test("frame demux recovers every-k-th complete PNG from a concatenated sequence") {
-    import spark.implicits._
-    val ids = Seq(0L, 1L, 3L, 7L, 12L) // 1..8 frames each (1 + id % 8)
-    val media = Multimodal.synthesizePngSequence(spark, ids.toDF("doc_id"))
-    val frames = Multimodal.frameSample(spark, media, everyK = 2).collect()
-    // count law: kept = ceil(n/2) with n = 1 + id % 8, original indices even
-    val byDoc = frames.groupBy(_.doc_id)
-    for (id <- ids) {
-      val n = 1 + (id % 8).toInt
-      assert(byDoc(id).length == (n + 1) / 2, s"doc $id")
-      assert(byDoc(id).forall(_.frame_idx % 2 == 0))
-    }
-    // every emitted slice is a COMPLETE decodable PNG with the frame dims
-    frames.foreach { f =>
-      assert(Multimodal.decodeImageHeader(f.payload).contains(("png", 8, 8)))
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(f.payload))
-      assert(img != null && img.getWidth == 8 && img.getHeight == 8)
-    }
-    // malformed tail: well-formed prefix frames still demux (quarantine-style)
-    val seq3 = media.filter($"doc_id" === 3L).collect().head.getAs[Array[Byte]]("payload")
-    val truncated = java.util.Arrays.copyOfRange(seq3, 0, seq3.length - 10)
-    val partial = Seq((3L, truncated)).toDF("doc_id", "payload")
-    val pf = Multimodal.frameSample(spark, partial, everyK = 1).collect()
-    assert(pf.length == 3) // 4 frames, last one truncated away
-  }
-
   test("AVI demux recovers every-k-th MJPEG frame from a real RIFF container") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 3L, 7L, 12L) // 1..8 frames each (1 + id % 8)

@@ -29,9 +29,9 @@ class SimilaritySpec extends SparkTestBase {
 
   test("corpus-adaptive planes keep LSH candidate volume subquadratic") {
     // fixed planes = fixed bucket count: on 4x the corpus each bucket
-    // holds 4x the vectors and pair work grows ~16x. lshPlanes grows the
-    // bucket count with the corpus instead, holding expected population
-    // at O(targetBucket). Measured on candidate COUNTS (noise-free), not
+    // holds 4x the vectors and pair work grows ~16x. lshAutoPlan grows
+    // the bucket count with the corpus instead, holding expected
+    // population at O(1). Measured on candidate COUNTS (noise-free), not
     // wall clock; vectors are seeded-deterministic.
     val rnd = new scala.util.Random(7)
     def corpus(n: Int) = (0 until n)
@@ -39,11 +39,16 @@ class SimilaritySpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     val small = corpus(1000).cache()
     val big = corpus(4000).cache()
-    def cands(df: org.apache.spark.sql.DataFrame, planes: Int): Long =
-      Similarity.annCandidates(df, 0.8, planes = planes).count()
-    val pinnedRatio = cands(big, 6).toDouble / cands(small, 6)
-    val autoRatio = cands(big, Similarity.lshPlanes(4000)).toDouble /
-      cands(small, Similarity.lshPlanes(1000))
+    // the pinned form: lshAutoPlan's config with planes held at 6
+    def pinned(df: org.apache.spark.sql.DataFrame, n: Long): Long = {
+      val (planes, radius, tables) =
+        Similarity.lshAutoPlan(n, 0.8, targetRecall = 0.999, maxPlanes = 6)
+      Similarity.annCandidatesWith(df, planes, radius, tables, 64).count()
+    }
+    def auto(df: org.apache.spark.sql.DataFrame): Long =
+      Similarity.annCandidatesAuto(df, 0.8).count()
+    val pinnedRatio = pinned(big, 4000).toDouble / pinned(small, 1000)
+    val autoRatio = auto(big).toDouble / auto(small)
     small.unpersist(); big.unpersist()
     assert(pinnedRatio > 10, f"fixed planes should grow ~quadratic: $pinnedRatio%.1f")
     assert(autoRatio < 9, f"adaptive planes should stay near-linear: $autoRatio%.1f")
@@ -55,7 +60,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("lshAutoPlan: log-scales planes where bucketing pays, floors where it cannot") {
     // enumeration regime (recall 0.9999 at cosine 0.2, near-random data):
-    // lshPlan must take radius ~ planes−1 there, so wider signatures only
+    // the plan must take radius ~ planes−1 there, so wider signatures only
     // inflate the probe-mask fan-out exponentially (a planes=12 config
     // exploded 4095 masks into a broadcast OOM before the cost rank
     // existed) — the total-row model must keep the floor
@@ -94,26 +99,27 @@ class SimilaritySpec extends SparkTestBase {
     assert(got.map(t => (t._1, t._2)).toSet == exact)
   }
 
-  test("lshPlan picks threshold-driven configs that meet the recall target") {
-    for (minCosine <- Seq(0.2, 0.35, 0.5, 0.8, 0.9);
+  test("lshAutoPlan picks threshold-driven configs meeting the recall target") {
+    for (n <- Seq(500L, 20000L, 2000000L);
+         minCosine <- Seq(0.2, 0.35, 0.5, 0.8, 0.9);
          target <- Seq(0.999, 0.9999)) {
-      val (radius, tables) = Similarity.lshPlan(minCosine, 6, target)
-      assert(radius >= 0 && radius < 6, "radius = planes is brute force by hash join")
+      val (planes, radius, tables) = Similarity.lshAutoPlan(n, minCosine, target)
+      assert(radius >= 0 && radius < planes, "radius = planes is brute force by hash join")
       assert(tables >= 1)
       // re-derive the compounded boundary-pair miss and check the contract
       val p = math.acos(minCosine) / math.Pi
       val pHit = (0 to radius).map(k =>
-        (0 until k).map(i => (6 - i).toDouble / (i + 1)).product *
-          math.pow(p, k) * math.pow(1 - p, 6 - k)).sum
-      assert(math.pow(1 - pHit, tables) <= 1 - target + 1e-12,
-        s"minCosine=$minCosine target=$target -> ($radius, $tables)")
+        (0 until k).map(i => (planes - i).toDouble / (i + 1)).product *
+          math.pow(p, k) * math.pow(1 - p, planes - k)).sum
+      assert(1 - math.pow(1 - pHit, tables) >= target - 1e-12,
+        s"n=$n minCosine=$minCosine target=$target -> ($planes, $radius, $tables)")
     }
     // tight thresholds genuinely prune: at 0.8 the planner needs few,
     // narrow probes; at 0.2 it is forced toward near-enumeration
-    val (rTight, tTight) = Similarity.lshPlan(0.8, 6, 0.9999)
-    val tightCost = tTight * Similarity.probeMasks(6, rTight).size / 64.0
-    val (rLoose, tLoose) = Similarity.lshPlan(0.2, 6, 0.9999)
-    val looseCost = tLoose * Similarity.probeMasks(6, rLoose).size / 64.0
+    def cost(c: (Int, Int, Int)): Double =
+      c._3 * Similarity.probeMasks(c._1, c._2).size / math.pow(2.0, c._1)
+    val tightCost = cost(Similarity.lshAutoPlan(500, 0.8, 0.9999))
+    val looseCost = cost(Similarity.lshAutoPlan(500, 0.2, 0.9999))
     assert(tightCost < looseCost / 2,
       s"0.8 cost $tightCost should be far below 0.2 cost $looseCost")
   }
@@ -329,11 +335,10 @@ class SimilaritySpec extends SparkTestBase {
 
   test("LSH signatures are deterministic across invocations") {
     val e = graft.Tables.embeddings(spark, sf0001).limit(20)
-    val s1 = Similarity.withLshSignature(e).select("vec_id", "lsh_sig").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val s2 = Similarity.withLshSignature(e).select("vec_id", "lsh_sig").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(s1 == s2)
+    def sigs() = e.select(col("vec_id"),
+        graft.functions.hyperplane_signature(col("embedding"), 6, 64))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(sigs() == sigs())
   }
 
   test("topComponent recovers the dominant direction, unit norm, layout-proof") {

@@ -15,7 +15,7 @@ class EventStreamSpec extends SparkTestBase {
     // r15 optimization + r16 derivation: a replay's stateful stages run
     // at a partition count DERIVED from the replay's input volume
     // (1/1M rows, floor 1, capped at the session default — LoopConf's
-    // discipline, env-overridable), NOT the session's scan-sized
+    // discipline), NOT the session's scan-sized
     // spark.sql.shuffle.partitions — and the session value is restored
     // afterwards (Bench re-sets its default per query; Verify relies on
     // the restore). Parity of results at the smaller count is what every
@@ -35,20 +35,14 @@ class EventStreamSpec extends SparkTestBase {
 
   test("statePartitions derives from state volume, capped at the session default") {
     val session = spark.sessionState.conf.numShufflePartitions
-    if (sys.env.contains("SPARK_GRAFT_STREAM_STATE_PARTS")) {
-      // env override wins verbatim — the derivation is bypassed
-      val n = sys.env("SPARK_GRAFT_STREAM_STATE_PARTS").toInt
-      assert(EventStream.statePartitions(spark, 1L) == n)
-    } else {
-      // tiny state → 1 partition (floor); linear in millions of rows;
-      // huge state → exactly the session default (the cap: the knob can
-      // only shrink toward the data, never starve a 100 TB stream)
-      assert(EventStream.statePartitions(spark, 0L) == 1)
-      assert(EventStream.statePartitions(spark, 999999L) == 1)
-      assert(EventStream.statePartitions(spark, 5000000L) ==
-        math.min(6, session))
-      assert(EventStream.statePartitions(spark, Long.MaxValue / 2) == session)
-    }
+    // tiny state → 1 partition (floor); linear in millions of rows;
+    // huge state → exactly the session default (the cap: the derivation
+    // can only shrink toward the data, never starve a 100 TB stream)
+    assert(EventStream.statePartitions(spark, 0L) == 1)
+    assert(EventStream.statePartitions(spark, 999999L) == 1)
+    assert(EventStream.statePartitions(spark, 5000000L) ==
+      math.min(6, session))
+    assert(EventStream.statePartitions(spark, Long.MaxValue / 2) == session)
   }
 
   test("streaming CDC merge converges to the batch per-user argmax") {

@@ -1,32 +1,10 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.streaming.StatefulSessions.{AnomEvent, AnomState, UserEvent, UserTotals, anomalyCells}
+import graft.streaming.StatefulSessions.{AnomEvent, AnomState, anomalyCells}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StatefulSessionsSpec extends SparkTestBase {
-
-  test("flatMapGroupsWithState accumulates per-user totals across batches") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    val source = MemoryStream[UserEvent]
-    val q = StatefulSessions.runningTotals(spark, source.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stateful_totals").start()
-    try {
-      source.addData(UserEvent(1, "click", 1.0), UserEvent(1, "view", 2.0),
-        UserEvent(2, "click", 5.0))
-      q.processAllAvailable()
-      source.addData(UserEvent(1, "purchase", 4.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("stateful_totals").as[UserTotals].collect()
-    // batch 1 emissions
-    assert(out.contains(UserTotals(1, 2, 3.0)))
-    assert(out.contains(UserTotals(2, 1, 5.0)))
-    // batch 2: user 1's state carried forward
-    assert(out.contains(UserTotals(1, 3, 7.0)))
-  }
 
   test("matchPattern: hits span batches once, state stays bounded at k-1") {
     import StatefulSessions.{TypedEvent, matchPattern}
@@ -175,9 +153,11 @@ class StatefulSessionsSpec extends SparkTestBase {
   }
 
   test("batch Dataset runs through the same stateful transformation") {
+    import StatefulSessions.TypedEvent
     import spark.implicits._
-    val ds = Seq(UserEvent(7, "click", 1.5), UserEvent(7, "view", 2.5)).toDS()
-    val got = StatefulSessions.runningTotals(spark, ds).collect()
-    assert(got.toSeq == Seq(UserTotals(7, 2, 4.0)))
+    val ds = Seq(TypedEvent(7, 1, 10, "a"), TypedEvent(7, 2, 20, "b"),
+      TypedEvent(7, 3, 30, "a"), TypedEvent(7, 4, 40, "b")).toDS()
+    val got = StatefulSessions.patternHits(spark, ds, Seq("a", "b")).collect()
+    assert(got.map(_.start_event_id).sorted.toSeq == Seq(1L, 3L))
   }
 }
