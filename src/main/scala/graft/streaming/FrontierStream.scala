@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.operators.Curation
-import graft.util.Fs.rmTree
 
 /** ST19 — the STREAMING crawl frontier: d14's URL-canonicalization dedup
   * as a `foreachBatch` job (the st18 discipline applied to the crawl
@@ -35,10 +34,6 @@ object FrontierStream {
     * the replay is genuinely multi-batch). */
   def runFrontierOverFixture(spark: SparkSession, fetches: DataFrame,
                              onBatch: Long => Unit = _ => ()): DataFrame = {
-    // the lattice makes the RESULT order-free; the staged batch order
-    // keeps onBatch counts stable
-    val (srcDir, rows) = EventStream.stageRangeBatches(fetches, "FrontierStream", "page_id")
-    EventStream.withStateSizedShuffle(spark, rows) {
     val emptyRel = (schema: StructType) => spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     var agg = emptyRel(StructType(Seq(
@@ -49,41 +44,35 @@ object FrontierStream {
     var forms = emptyRel(StructType(Seq(
       StructField("canonical_url", StringType),
       StructField("url_digest", StringType))))
-    val stream = spark.readStream.schema(fetches.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val canon = batch.select(col("page_id"), col("ts"),
-            Curation.canonicalUrl(col("url")).as("canonical_url"),
-            md5(col("url")).as("url_digest"))
-          .localCheckpoint()
-        val n = canon.count()
-        if (n > 0) onBatch(n)
-        val bAgg = canon.groupBy(col("canonical_url"))
-          .agg(count(lit(1)).as("n_fetches"),
-            min(col("page_id")).as("kept_page_id"),
-            min(col("ts")).as("first_ts"))
-        agg = agg.unionByName(bAgg)
-          .groupBy(col("canonical_url"))
-          .agg(sum(col("n_fetches")).as("n_fetches"),
-            min(col("kept_page_id")).as("kept_page_id"),
-            min(col("first_ts")).as("first_ts"))
-          .localCheckpoint()
-        forms = forms
-          .unionByName(canon.select(col("canonical_url"), col("url_digest")))
-          .distinct().localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); rmTree(srcDir) }
+    // the lattice makes the RESULT order-free; the staged batch order
+    // keeps onBatch counts stable
+    Replay.fold(spark, "FrontierStream", Replay.Ranged(fetches, col("page_id")))(
+      _.read(spark)) { batch =>
+      val canon = batch.select(col("page_id"), col("ts"),
+          Curation.canonicalUrl(col("url")).as("canonical_url"),
+          md5(col("url")).as("url_digest"))
+        .localCheckpoint()
+      val n = canon.count()
+      if (n > 0) onBatch(n)
+      val bAgg = canon.groupBy(col("canonical_url"))
+        .agg(count(lit(1)).as("n_fetches"),
+          min(col("page_id")).as("kept_page_id"),
+          min(col("ts")).as("first_ts"))
+      agg = agg.unionByName(bAgg)
+        .groupBy(col("canonical_url"))
+        .agg(sum(col("n_fetches")).as("n_fetches"),
+          min(col("kept_page_id")).as("kept_page_id"),
+          min(col("first_ts")).as("first_ts"))
+        .localCheckpoint()
+      forms = forms
+        .unionByName(canon.select(col("canonical_url"), col("url_digest")))
+        .distinct().localCheckpoint()
+    }
     agg.join(
         forms.groupBy(col("canonical_url"))
           .agg(count(lit(1)).as("n_raw_forms")),
         Seq("canonical_url"))
       .select(col("canonical_url"), col("n_fetches"), col("n_raw_forms"),
         col("kept_page_id"), col("first_ts"))
-    }
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
-import graft.util.Fs.rmTree
 
 /** ST18 — the STREAMING delta release: release2's nightly admission
   * waterfall as a `foreachBatch` streaming job (the st6/st14 batch-parity
@@ -46,8 +45,6 @@ object ReleaseStream {
       spark: SparkSession, delta: DataFrame, baseRel: DataFrame,
       gateOk: DataFrame => DataFrame,
       onBatch: Long => Unit = _ => ()): (DataFrame, DataFrame, Long) = {
-    val (srcDir, rows) = EventStream.stageRangeBatches(delta, "ReleaseStream", "doc_id")
-    EventStream.withStateSizedShuffle(spark, rows) {
     val emptyRel = (schema: StructType) => spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     var seen = emptyRel(StructType(Seq(
@@ -57,41 +54,33 @@ object ReleaseStream {
     var nGateOk = 0L
     val baseDigests = baseRel.select(md5(col("text")).as("digest"))
       .localCheckpoint()
-    val stream = spark.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val g = gateOk(batch).localCheckpoint()
-        val nG = g.count()
-        if (nG > 0) onBatch(nG)
-        nGateOk += nG
-        // digest admission: new within batch (min-doc_id rep) AND unseen
-        // vs the release and every prior night
-        val e = Dedup.exactByDigest(g, col("text"),
-            carry = Seq("text", "source", "n_tok"))
-          .join(baseDigests.unionByName(
-              seen.select(md5(col("text")).as("digest"))),
-            Seq("digest"), "left_anti")
-          .select(col("doc_id"), col("text"), col("source"), col("n_tok"))
-          .localCheckpoint()
-        // near-dup admission: corpus side = release ∪ ALL prior digest-new
-        // rows (blockers need not be admitted — release2's contract);
-        // within-batch earlier ids are nearDupAdmission's incoming arm
-        val adm = Dedup.nearDupAdmission(
-            e.select(col("doc_id"), col("text")),
-            baseRel.select(col("doc_id"), col("text"))
-              .unionByName(seen.select(col("doc_id"), col("text"))))
-          .filter(col("admitted")).select(col("doc_id"))
-        admitted = admitted.unionByName(
-          e.join(adm, Seq("doc_id"), "left_semi")).localCheckpoint()
-        seen = seen.unionByName(e).localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); rmTree(srcDir) }
-    (seen, admitted, nGateOk)
+    Replay.fold(spark, "ReleaseStream", Replay.Ranged(delta, col("doc_id")))(
+      _.read(spark)) { batch =>
+      val g = gateOk(batch).localCheckpoint()
+      val nG = g.count()
+      if (nG > 0) onBatch(nG)
+      nGateOk += nG
+      // digest admission: new within batch (min-doc_id rep) AND unseen
+      // vs the release and every prior night
+      val e = Dedup.exactByDigest(g, col("text"),
+          carry = Seq("text", "source", "n_tok"))
+        .join(baseDigests.unionByName(
+            seen.select(md5(col("text")).as("digest"))),
+          Seq("digest"), "left_anti")
+        .select(col("doc_id"), col("text"), col("source"), col("n_tok"))
+        .localCheckpoint()
+      // near-dup admission: corpus side = release ∪ ALL prior digest-new
+      // rows (blockers need not be admitted — release2's contract);
+      // within-batch earlier ids are nearDupAdmission's incoming arm
+      val adm = Dedup.nearDupAdmission(
+          e.select(col("doc_id"), col("text")),
+          baseRel.select(col("doc_id"), col("text"))
+            .unionByName(seen.select(col("doc_id"), col("text"))))
+        .filter(col("admitted")).select(col("doc_id"))
+      admitted = admitted.unionByName(
+        e.join(adm, Seq("doc_id"), "left_semi")).localCheckpoint()
+      seen = seen.unionByName(e).localCheckpoint()
     }
+    (seen, admitted, nGateOk)
   }
 }

@@ -81,59 +81,22 @@ object SessionStream {
   /** Replay the events fixture through the stateful sessionizer and return
     * every closed session — the batch-parity harness for the `w3` oracle.
     *
-    * The mechanics of finishing a finite replay with event-time timeouts:
-    * a far-future SENTINEL event lands in a second micro-batch
-    * (`maxFilesPerTrigger=1`, file mtimes force the order), pushing the
-    * watermark past every real session's gap boundary; Spark then runs a
-    * no-data batch in which all remaining open sessions time out and emit.
-    * The sentinel user (-1) is filtered from the result. Watermark delay 0:
-    * the replay is in-order within its single real batch. */
+    * Finishing a finite replay with event-time timeouts: the sentinel
+    * batch pushes the watermark past every real session's gap boundary;
+    * Spark then runs a no-data batch in which all remaining open sessions
+    * time out and emit. The sentinel user (-1) is filtered from the
+    * result. Watermark delay 0: the replay is in-order within its single
+    * real batch. */
   def runOverFixture(spark: SparkSession, sfDir: String,
-                     gapMinutes: Int = 30): org.apache.spark.sql.DataFrame =
-    EventStream.withStateSizedShuffle(spark,
-      graft.Tables.parquetRowCount(spark, s"$sfDir/events.parquet")) {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+                     gapMinutes: Int = 30): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
-
-    val srcDir = Files.createTempDirectory("graft-stream-sessions")
-    val eventsFile = srcDir.resolve("a_events.parquet")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), eventsFile,
-      StandardCopyOption.REPLACE_EXISTING)
-    // probed, never assumed: the fixture's ts encoding has drifted between
-    // int64 TIMESTAMP(NANOS) and timestamp[us] across regenerations
-    val codec = EventStream.codecFor(spark, eventsFile.toString)
-    // sentinel: one far-future event in its own file, strictly later mtime,
-    // written in the SAME physical ts type as the data file
-    val sentinelDir = Files.createTempDirectory("graft-sentinel")
-    val farFutureMicros = 4102444800L * 1000000L // 2100-01-01, micros
-    Seq((-1L, farFutureMicros, -1L, "sentinel", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .withColumn("ts", codec.microsToRaw(col("ts")))
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val part = Files.list(sentinelDir).toArray.map(_.toString)
-      .find(_.endsWith(".parquet")).get
-    val sentinelFile = srcDir.resolve("z_sentinel.parquet")
-    Files.copy(Paths.get(part), sentinelFile)
-    Files.setLastModifiedTime(eventsFile,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000))
-    Files.setLastModifiedTime(sentinelFile,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-
-    val stream = spark.readStream.schema(codec.rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      .withColumn("ts", codec.tsTimestamp)
-      .select(col("user_id"), col("ts"), col("value")).as[SessEvent]
-    val queryName = EventStream.scopedQueryName("graft_stream_sessions")
-    val q = closedSessions(spark, stream, gapMinutes, watermarkDelay = "0 seconds")
-      .writeStream.outputMode("append").format("memory").queryName(queryName).start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      graft.util.Fs.rmTree(srcDir)
-      graft.util.Fs.rmTree(sentinelDir)
-    }
-    spark.table(queryName).filter(col("user_id") >= 0)
+    val fx = new EventStream.Fixture(spark, sfDir)
+    Replay.toMemory(spark, "SessionStream", fx.thenSentinel("click")) { st =>
+      closedSessions(spark,
+        fx.stream(st).select(col("user_id"), col("ts"), col("value")).as[SessEvent],
+        gapMinutes, watermarkDelay = "0 seconds")
+    }._1.filter(col("user_id") >= 0)
   }
 
   /** Point the session's state store at RocksDB — the unbounded-clickstream

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.util.Fs.rmTree
-
 /** ST20 — the STREAMING SFT packer: release3's no-straddle packing +
   * per-shard dataset card as a `foreachBatch` job (the st18/st19
   * discipline applied to the SFT leg of the ship line). Gated
@@ -55,11 +53,6 @@ object SftPackStream {
       col("doc_id"),
       least(col("n_tokens_used").cast("long"), lit(cap)).as("eff_tok"),
       col("assistant_tokens").cast("long").as("a_tok"))
-    // split the replay on ORD boundaries: the per-shard processing order,
-    // so each batch is a prefix-extension of every shard's fold — unlike
-    // st19's lattice, the packer fold REQUIRES ord-ascending batches
-    val (srcDir, rows) = EventStream.stageRangeBatches(annotated, "SftPackStream", "ord")
-    EventStream.withStateSizedShuffle(spark, rows) {
     var bins = spark.createDataFrame(
       new java.util.ArrayList[Row](), StructType(Seq(
         StructField("shard", LongType), StructField("seq_id", LongType),
@@ -74,61 +67,57 @@ object SftPackStream {
       StructField("seq_id", LongType, nullable = false),
       StructField("eff_tok", LongType, nullable = false),
       StructField("a_tok", LongType, nullable = false)))
-    val stream = spark.readStream.schema(annotated.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val n = batch.count()
-        if (n > 0) {
-          onBatch(n)
-          val seed = state
-          val parted = batch
-            .select(col("shard"), col("ord"), col("doc_id"),
-              col("eff_tok"), col("a_tok"))
-            .repartition(col("shard"))
-            .sortWithinPartitions(col("shard"), col("ord"), col("doc_id"))
-          val packed = parted.rdd.mapPartitions { it =>
-            var curShard = Long.MinValue
-            var seq = 0L
-            var fill = 0L
-            it.map { r =>
-              val sh = r.getLong(0)
-              if (sh != curShard) {
-                curShard = sh
-                val (s0, f0) = seed.getOrElse(sh, (0L, 0L))
-                seq = s0; fill = f0
-              }
-              val eff = r.getLong(3)
-              if (fill + eff > cap) { seq += 1; fill = 0L }
-              fill += eff
-              Row(sh, seq, eff, r.getLong(4))
+    // split the replay on ORD boundaries: the per-shard processing order,
+    // so each batch is a prefix-extension of every shard's fold — unlike
+    // st19's lattice, the packer fold REQUIRES ord-ascending batches
+    Replay.fold(spark, "SftPackStream", Replay.Ranged(annotated, col("ord")))(
+      _.read(spark)) { batch =>
+      val n = batch.count()
+      if (n > 0) {
+        onBatch(n)
+        val seed = state
+        val parted = batch
+          .select(col("shard"), col("ord"), col("doc_id"),
+            col("eff_tok"), col("a_tok"))
+          .repartition(col("shard"))
+          .sortWithinPartitions(col("shard"), col("ord"), col("doc_id"))
+        val packed = parted.rdd.mapPartitions { it =>
+          var curShard = Long.MinValue
+          var seq = 0L
+          var fill = 0L
+          it.map { r =>
+            val sh = r.getLong(0)
+            if (sh != curShard) {
+              curShard = sh
+              val (s0, f0) = seed.getOrElse(sh, (0L, 0L))
+              seq = s0; fill = f0
             }
+            val eff = r.getLong(3)
+            if (fill + eff > cap) { seq += 1; fill = 0L }
+            fill += eff
+            Row(sh, seq, eff, r.getLong(4))
           }
-          val binPart = spark.createDataFrame(packed, packedSchema)
-            .groupBy(col("shard"), col("seq_id"))
-            .agg(count(lit(1)).as("n_convos"),
-              sum(col("eff_tok")).as("bin_tokens"),
-              sum(col("a_tok")).as("trainable"))
-          bins = bins.unionByName(binPart)
-            .groupBy(col("shard"), col("seq_id"))
-            .agg(sum(col("n_convos")).as("n_convos"),
-              sum(col("bin_tokens")).as("bin_tokens"),
-              sum(col("trainable")).as("trainable"))
-            .localCheckpoint()
-          // carry each shard's OPEN bin forward: bounded collect
-          // (`shards` rows — see the object scaladoc)
-          state = bins.groupBy(col("shard"))
-            .agg(max(col("seq_id")).as("sq"),
-              max_by(col("bin_tokens"), col("seq_id")).as("fill"))
-            .collect()
-            .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
         }
-        ()
+        val binPart = spark.createDataFrame(packed, packedSchema)
+          .groupBy(col("shard"), col("seq_id"))
+          .agg(count(lit(1)).as("n_convos"),
+            sum(col("eff_tok")).as("bin_tokens"),
+            sum(col("a_tok")).as("trainable"))
+        bins = bins.unionByName(binPart)
+          .groupBy(col("shard"), col("seq_id"))
+          .agg(sum(col("n_convos")).as("n_convos"),
+            sum(col("bin_tokens")).as("bin_tokens"),
+            sum(col("trainable")).as("trainable"))
+          .localCheckpoint()
+        // carry each shard's OPEN bin forward: bounded collect
+        // (`shards` rows — see the object scaladoc)
+        state = bins.groupBy(col("shard"))
+          .agg(max(col("seq_id")).as("sq"),
+            max_by(col("bin_tokens"), col("seq_id")).as("fill"))
+          .collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); rmTree(srcDir) }
+    }
     bins.groupBy(col("shard"))
       .agg(count(lit(1)).as("n_bins"),
         sum(col("n_convos")).as("n_convos"),
@@ -142,6 +131,5 @@ object SftPackStream {
         graft.functions.portableRound(
           col("n_tokens").cast("double") / (col("n_bins") * capacity.toDouble), 6)
           .as("mean_fill"))
-    }
   }
 }

@@ -124,8 +124,10 @@ object StatefulSessions {
 
   // ───────────────────────── streaming anomalies ─────────────────────────
 
-  final case class AnomEvent(event_type: String, ts: java.sql.Timestamp,
-                             cents: Long)
+  /** One event's type, time and exact cents: the input of the anomaly,
+    * CUSUM and gap-fill folds. */
+  final case class CentsEvent(event_type: String, ts: java.sql.Timestamp,
+                              cents: Long)
   /** Per-event-type anomaly state: `open` accumulates cent totals for days
     * the watermark has not yet sealed (at most watermark-delay + 1 days),
     * `trail` carries the last `trailing − 1` SEALED (epoch_day, cents)
@@ -155,7 +157,7 @@ object StatefulSessions {
     * batch plan's, so streamed z-scores EQUAL the batch query's bit for
     * bit — the parity the spec and the shared anom1 oracle pin. */
   def anomalyCells(trailing: Int, zThreshold: Double)(
-      eventType: String, events: Iterator[AnomEvent],
+      eventType: String, events: Iterator[CentsEvent],
       state: GroupState[AnomState]): Iterator[AnomRow] = {
     val prev = state.getOption.getOrElse(AnomState(Nil, Nil))
     val open = scala.collection.mutable.Map[Int, Long](prev.open: _*)
@@ -199,7 +201,7 @@ object StatefulSessions {
   }
 
   /** Wire the anomaly scorer over a watermarked typed Dataset. */
-  def anomalyStream(spark: SparkSession, events: Dataset[AnomEvent],
+  def anomalyStream(spark: SparkSession, events: Dataset[CentsEvent],
                     trailing: Int = 7,
                     zThreshold: Double = 2.0): Dataset[AnomRow] = {
     import spark.implicits._
@@ -210,8 +212,6 @@ object StatefulSessions {
 
   // ───────────────────────── streaming CUSUM drift ─────────────────────────
 
-  final case class CusumEvent(event_type: String, ts: java.sql.Timestamp,
-                              cents: Long)
   /** Per-key CUSUM state: unsealed day totals (watermark-delay bounded)
     * plus the 4-scalar chart core — warmup progress (n, sum) and the two
     * one-sided statistics in W·cents units. O(open days) while sealing,
@@ -234,7 +234,7 @@ object StatefulSessions {
     * for digit. Timers re-arm at the earliest open day's end (quiet keys
     * still flush); at rest the state is four scalars per event type. */
   def cusumCells(warmDays: Int)(
-      eventType: String, events: Iterator[CusumEvent],
+      eventType: String, events: Iterator[CentsEvent],
       state: GroupState[CusumState]): Iterator[CusumRow] = {
     val prev = state.getOption.getOrElse(CusumState(Nil, 0, 0L, 0L, 0L))
     val open = scala.collection.mutable.Map[Int, Long](prev.open: _*)
@@ -272,7 +272,7 @@ object StatefulSessions {
   }
 
   /** Wire the CUSUM chart over a watermarked typed Dataset. */
-  def cusumStream(spark: SparkSession, events: Dataset[CusumEvent],
+  def cusumStream(spark: SparkSession, events: Dataset[CentsEvent],
                   warmDays: Int = 10): Dataset[CusumRow] = {
     import spark.implicits._
     events.groupByKey(_.event_type)
@@ -364,7 +364,6 @@ object StatefulSessions {
 
   // ───────────────────────── streaming gap fill ─────────────────────────
 
-  final case class GapEvent(event_type: String, ts: java.sql.Timestamp, cents: Long)
   /** Per-key LOCF state: the last EMITTED day + its carried cent value,
     * the last activity time (drives eviction), and the open (day, n,
     * cents) totals the watermark has not yet sealed — O(open days) per
@@ -401,7 +400,7 @@ object StatefulSessions {
     * the event-type vocabulary, inherently bounded. Total state:
     * O(keys × open days) while sealing, O(keys) at rest. */
   def gapFillCells(
-      eventType: String, events: Iterator[GapEvent],
+      eventType: String, events: Iterator[CentsEvent],
       state: GroupState[GapState]): Iterator[GapCell] = {
     val prev = state.getOption
     val open = scala.collection.mutable.Map[Int, (Long, Long)](
@@ -441,7 +440,7 @@ object StatefulSessions {
   }
 
   /** Wire the gap-fill emitter over a watermarked typed Dataset. */
-  def gapFillStream(spark: SparkSession, events: Dataset[GapEvent]): Dataset[GapCell] = {
+  def gapFillStream(spark: SparkSession, events: Dataset[CentsEvent]): Dataset[GapCell] = {
     import spark.implicits._
     events.groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(

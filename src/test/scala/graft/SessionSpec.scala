@@ -24,21 +24,24 @@ class SessionSpec extends SparkTestBase {
     extensionsOnce()
   }
 
-  test("src/main builds its SparkSession in exactly one place") {
+  test("src/main builds its SparkSession and drains its streams in exactly one place") {
+    // token -> the one file allowed to hold it (outside comments)
+    val owners = Seq(
+      "SparkSession.builder" -> "graft/Bench.scala",
+      "processAllAvailable" -> "graft/streaming/Replay.scala")
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
-    val builders = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { f =>
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    owners.foreach { case (token, owner) =>
+      val uses = files.flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex
           .filter { case (l, _) =>
-            l.contains("SparkSession.builder") && !l.trim.startsWith("*") &&
-              !l.trim.startsWith("//")
+            l.contains(token) && !l.trim.startsWith("*") && !l.trim.startsWith("//")
           }
           .map { case (_, i) => s"${root.relativize(f)}:${i + 1}" }
-      }.toList
-    assert(builders.size == 1 && builders.head.startsWith("graft/Bench.scala"),
-      builders.mkString(", "))
+      }
+      assert(uses.size == 1 && uses.head.startsWith(owner + ":"), s"$token: ${uses.mkString(", ")}")
+    }
   }
 
   test("name filter: empty or blank means no filter") {

@@ -15,6 +15,13 @@ trait SparkTestBase extends AnyFunSuite {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  /** Run `body` on a fresh directory named `prefix…` in the JVM temp dir,
+    * and delete it afterwards, whether `body` returns or throws. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally graft.util.Fs.rmTree(dir)
+  }
+
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     val ra = rows(a).map(_.toString).sorted

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -9,10 +7,10 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
 
 class TablesSpec extends SparkTestBase {
 
-  test("schema cache keys on schema-affecting parquet confs (binaryAsString)") {
+  test("schema cache keys on schema-affecting parquet confs (binaryAsString)") { withTempDir("graft-tables") { tmp =>
     // an unannotated BINARY column, written without Spark's own schema
     // metadata (which would pin the type and hide the conf)
-    val dir = Files.createTempDirectory("graft-tables").toString
+    val dir = tmp.toString
     val schema = MessageTypeParser.parseMessageType("message m { required binary v; }")
     val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/bin.parquet"))
       .withType(schema).build()
@@ -25,5 +23,5 @@ class TablesSpec extends SparkTestBase {
     try assert(vType == StringType)
     finally spark.conf.unset(key)
     assert(vType == BinaryType)
-  }
+  }}
 }

@@ -2,21 +2,20 @@ package graft.etl
 
 import graft.{Queries, SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end golden test (SURVEY.md §5.2 item 4): the full E1 pipeline on
   * sf0.001 through the staged runner, written to parquet + CSV, with the
   * checked-in expected aggregates. */
 class GoldenPipelineSpec extends SparkTestBase {
 
-  test("E1 staged run: extract → transform → metrics → sinks, golden aggregates") {
+  test("E1 staged run: extract → transform → metrics → sinks, golden aggregates") { withTempDir("graft-golden") { tmp =>
     val p = new Pipeline(spark)
     // one lineage end to end: each stage builds on the previous stage's
     // observed frame, so the single Load action fires every stage metric
     val extracted = p.stage("extract", Tables.customer(spark, sf0001))
     val transformed = p.stage("transform", Queries.e1UsersFrom(
       extracted, Tables.nation(spark, sf0001), Tables.region(spark, sf0001)))
-    val out = Files.createTempDirectory("graft-golden").toString
+    val out = tmp.toString
     val loadStage = p.stage("load", transformed)
     Load.parquet(loadStage, s"$out/parquet") // the ONE terminal action
     Load.csv(transformed.select("id", "name", "segment", "nation", "region"), s"$out/csv")
@@ -32,7 +31,7 @@ class GoldenPipelineSpec extends SparkTestBase {
     val csvBack = spark.read.option("header", "true").option("escape", "\"").csv(s"$out/csv")
     assert(csvBack.count() == 139)
     assert(p.totalDurationSec > 0)
-  }
+  }}
 
   test("E4 fallback chain: first non-empty source wins; all-miss is empty") {
     import spark.implicits._

@@ -6,10 +6,10 @@ import java.nio.file.Files
 class LoadSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("K2 CSV export: quote-all with embedded-quote doubling, round-trips") {
+  test("K2 CSV export: quote-all with embedded-quote doubling, round-trips") { withTempDir("graft-csv") { tmp =>
     val df = Seq(("a \"quoted\" value", 1), ("plain", 2), (null.asInstanceOf[String], 3))
       .toDF("text", "n")
-    val out = Files.createTempDirectory("graft-csv").toString
+    val out = tmp.toString
     Load.csv(df, out)
     val raw = Files.list(java.nio.file.Paths.get(out)).toArray.map(_.toString)
       .filter(_.endsWith(".csv"))
@@ -19,11 +19,11 @@ class LoadSpec extends SparkTestBase {
     val back = spark.read.option("header", "true").option("inferSchema", "true")
       .option("escape", "\"").csv(out)
     assert(back.where($"text" === "a \"quoted\" value").count() == 1)
-  }
+  }}
 
-  test("partitioned parquet: key predicate prunes to partition directories") {
+  test("partitioned parquet: key predicate prunes to partition directories") { withTempDir("graft-part") { tmp =>
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-part").toString
+    val out = tmp.toString
     Load.partitionedParquet(orders, out, "o_orderpriority")
     // hive layout on disk
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
@@ -35,11 +35,11 @@ class LoadSpec extends SparkTestBase {
     assert(plan.contains("PartitionFilters: [isnotnull(o_orderpriority"), plan)
     assert(back.count() ==
       orders.filter($"o_orderpriority" === "1-URGENT").count())
-  }
+  }}
 
-  test("compact rewrites a many-file table into few files, rows unchanged") {
+  test("compact rewrites a many-file table into few files, rows unchanged") { withTempDir("graft-compact") { tmp =>
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-compact").resolve("t").toString
+    val out = tmp.resolve("t").toString
     orders.repartition(16).write.parquet(out)
     def parquetFiles = new java.io.File(out).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -47,7 +47,7 @@ class LoadSpec extends SparkTestBase {
     Load.compact(spark, out, 2)
     assert(parquetFiles == 2)
     assert(spark.read.parquet(out).count() == orders.count())
-  }
+  }}
 
   /** Sorted row strings of a table, partition columns included. */
   private def rowMultiset(dir: String): Seq[String] =
@@ -56,9 +56,9 @@ class LoadSpec extends SparkTestBase {
   private def parquetNames(dir: java.io.File): Set[String] =
     dir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
 
-  test("compact rewrites only over-budget leaves and keeps the Hive layout") {
+  test("compact rewrites only over-budget leaves and keeps the Hive layout") { withTempDir("graft-compact-leaf") { tmp =>
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-compact-leaf").resolve("t").toString
+    val out = tmp.resolve("t").toString
     // one file per partition, then four more into two of the five
     orders.repartition(1).write.partitionBy("o_orderpriority").parquet(out)
     val grown = Set("1-URGENT", "3-MEDIUM")
@@ -85,13 +85,13 @@ class LoadSpec extends SparkTestBase {
     val urgent = spark.read.parquet(out).filter($"o_orderpriority" === "1-URGENT")
     val plan = urgent.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(o_orderpriority"), plan)
-  }
+  }}
 
-  test("staging siblings are invisible to readers and recovered by compact") {
+  test("staging siblings are invisible to readers and recovered by compact") { withTempDir("graft-compact-stage") { tmp =>
     import java.nio.file.Paths
     import org.apache.commons.io.FileUtils
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-compact-stage").resolve("t").toString
+    val out = tmp.resolve("t").toString
     orders.repartition(3).write.partitionBy("o_orderpriority").parquet(out)
     val rows = spark.read.parquet(out).count()
     // mid-write state: a full staged copy of one partition beside it
@@ -107,11 +107,11 @@ class LoadSpec extends SparkTestBase {
     assert(!Files.exists(staged) && !Files.exists(stranded) && Files.exists(high))
     assert(spark.read.parquet(out).count() == rows)
     assert(parquetNames(high.toFile).size == 1)
-  }
+  }}
 
-  test("compaction merges evolved schemas: no column is dropped on rewrite") {
+  test("compaction merges evolved schemas: no column is dropped on rewrite") { withTempDir("graft-compact-merge") { tmp =>
     def evolved(): String = {
-      val out = Files.createTempDirectory("graft-compact-merge").resolve("t").toString
+      val out = Files.createTempDirectory(tmp, "evolved").resolve("t").toString
       Seq((1L, "a"), (2L, "b")).toDF("k", "v1").coalesce(1).write.parquet(out)
       Seq((3L, 30.0), (4L, 40.0)).toDF("k", "v2").coalesce(1)
         .write.mode("append").parquet(out)
@@ -137,11 +137,11 @@ class LoadSpec extends SparkTestBase {
       .join(manifest.select("part", "file_id", "file"), Seq("part", "file_id"))
     assert(Load.executeCompaction(spark, planned, "", plan) == 1)
     assertMerged(planned)
-  }
+  }}
 
-  test("parquetManifest lists every leaf of a two-level layout") {
+  test("parquetManifest lists every leaf of a two-level layout") { withTempDir("graft-manifest2") { tmp =>
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-manifest2").resolve("t").toString
+    val out = tmp.resolve("t").toString
     orders.repartition(2).write.partitionBy("o_orderstatus", "o_orderpriority").parquet(out)
     val manifest = Load.parquetManifest(spark, out).collect()
     val leaves = Files.walk(java.nio.file.Paths.get(out)).toArray
@@ -162,13 +162,13 @@ class LoadSpec extends SparkTestBase {
       assert(byId.map(_.getLong(1)).toSeq == byId.indices.map(_.toLong))
       assert(byId.map(_.getString(2)).toSeq == byId.map(_.getString(2)).sorted.toSeq)
     }
-  }
+  }}
 
   test("z2 executed end-to-end: planned bins become exactly that many files, " +
-    "and the zone-map scan fraction matches the plan's prediction") {
+    "and the zone-map scan fraction matches the plan's prediction") { withTempDir("graft-z2") { tmp =>
     import org.apache.spark.sql.functions._
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-z2").resolve("t").toString
+    val out = tmp.resolve("t").toString
     // a partitioned table that has accumulated many small files
     orders.repartition(8).write.partitionBy("o_orderpriority").parquet(out)
     val manifest = Load.parquetManifest(spark, out)
@@ -221,12 +221,12 @@ class LoadSpec extends SparkTestBase {
       s"scanned $postScanned files vs predicted $predictedScanned")
     // whole-table integrity across the untouched partitions
     assert(spark.read.parquet(out).count() == orders.count())
-  }
+  }}
 
-  test("executeCompaction recovers from an interrupted previous attempt") {
+  test("executeCompaction recovers from an interrupted previous attempt") { withTempDir("graft-z2r") { tmp =>
     import org.apache.spark.sql.functions._
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-z2r").resolve("t").toString
+    val out = tmp.resolve("t").toString
     orders.repartition(4).write.partitionBy("o_orderpriority").parquet(out)
     val manifest = Load.parquetManifest(spark, out)
     val part = manifest.select("part").distinct().collect()
@@ -246,11 +246,11 @@ class LoadSpec extends SparkTestBase {
     assert(achieved == 1)
     assert(spark.read.parquet(s"$out/$part").count() == rowsBefore)
     assert(!java.nio.file.Files.exists(stranded))
-  }
+  }}
 
-  test("executeCompaction is idempotent after a crash between swap and cleanup") {
+  test("executeCompaction is idempotent after a crash between swap and cleanup") { withTempDir("graft-z2i") { tmp =>
     val orders = graft.Tables.orders(spark, sf0001)
-    val out = Files.createTempDirectory("graft-z2i").resolve("t").toString
+    val out = tmp.resolve("t").toString
     orders.repartition(4).write.partitionBy("o_orderpriority").parquet(out)
     val manifest = Load.parquetManifest(spark, out)
     val part = manifest.select("part").distinct().collect()
@@ -271,16 +271,16 @@ class LoadSpec extends SparkTestBase {
     assert(Load.executeCompaction(spark, out, part, plan) == 1)
     assert(!Files.exists(stranded))
     assert(spark.read.parquet(s"$out/$part").count() == rows)
-  }
+  }}
 
-  test("K1 JSON sink + K3 preview emit one object per row") {
+  test("K1 JSON sink + K3 preview emit one object per row") { withTempDir("graft-json") { tmp =>
     val df = Seq(("x", 1), ("y", 2)).toDF("k", "v")
-    val out = Files.createTempDirectory("graft-json").toString
+    val out = tmp.toString
     Load.json(df, out)
     assert(spark.read.json(out).count() == 2)
     val preview = Load.previewJson(df, 1)
     assert(preview.length == 1 && preview.head.startsWith("{"))
-  }
+  }}
 
   test("K1 API envelope rejects an over-cap users frame loudly") {
     val users = (1 to 5).map(i => (i.toLong, s"u$i")).toDF("id", "name")

@@ -293,7 +293,7 @@ class SamplingSpec extends SparkTestBase {
   }
 
   test("materializeShard: packed sequences obey the manifest — capacity cuts, " +
-    "offset round-trip, straddle flags — and survive a parquet round-trip") {
+    "offset round-trip, straddle flags — and survive a parquet round-trip") { withTempDir("graft-pack") { tmp =>
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, sf0001)
     val (capacity, shards, shard) = (64, 4, 0)
@@ -306,7 +306,7 @@ class SamplingSpec extends SparkTestBase {
         r.getLong(3), r.getLong(4), r.getBoolean(5)))
     assert(manifest.nonEmpty)
     // materialize, write, re-read: bytes on disk are the contract
-    val out = java.nio.file.Files.createTempDirectory("graft-pack").toString
+    val out = tmp.toString
     Sampling.materializeShard(docs, col("doc_id"), toksCol,
       capacity, shards, shard).write.mode("overwrite").parquet(out)
     val packed = spark.read.parquet(out).orderBy("seq_id").collect()
@@ -329,7 +329,7 @@ class SamplingSpec extends SparkTestBase {
       assert(straddles == (seqOff + nTok > capacity),
         s"doc $docId straddle flag inconsistent")
     }
-  }
+  }}
 
   test("packSequencesNoStraddle: no document crosses a boundary, sequences " +
     "fill greedily, and the order matches packSequences exactly") {

@@ -2,13 +2,103 @@ package graft.streaming
 
 import graft.{SparkTestBase, Tables}
 import graft.operators.Windows
+import graft.util.Fs
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.TimestampNTZType
+
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
 class EventStreamSpec extends SparkTestBase {
+  import scala.jdk.CollectionConverters._
 
   test("streaming windowed aggregation equals the batch twin (parity)") {
     val batch = Windows.tumbling(Tables.events(spark, sf0001))
     val streamed = EventStream.runWindowedOverFixture(spark, sf0001)
     assertSameRows(batch, streamed)
+  }
+
+  test("a memory-sink replay drops its view and its rows stay readable") {
+    val streamed = EventStream.runWindowedOverFixture(spark, sf0001)
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("graft_stream_")), views.mkString(", "))
+    assertSameRows(Windows.tumbling(Tables.events(spark, sf0001)), streamed)
+  }
+
+  /** The staged data files under `dir`, oldest first. */
+  private def stagedFiles(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator.asScala.filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".")
+    }.toVector.sortBy(Files.getLastModifiedTime(_).toMillis)
+    finally walk.close()
+  }
+
+  test("the stager gives both layouts strictly ascending mtimes, sentinel last") {
+    val fx = new EventStream.Fixture(spark, sf0001)
+    Seq(fx.thenSentinel("click") -> 2, fx.ranged("click")((_, _) => 86400000000L) -> 4)
+      .foreach { case (layout, batches) =>
+        withTempDir("graft-stager-spec") { dir =>
+          assert(Replay.stage(layout, dir, "SpecStream").batches == batches)
+          // one data file per batch, each strictly newer than the last
+          val files = stagedFiles(dir)
+          assert(files.size == batches, files.mkString(", "))
+          val mtimes = files.map(Files.getLastModifiedTime(_).toMillis)
+          assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b }, mtimes)
+          // the newest file is the sentinel batch: user −1 rows only
+          assert(files.last.getParent.getFileName.toString == s"b${batches - 1}")
+          val sentinel = spark.read.schema(fx.codec.rawSchema).parquet(files.last.toString)
+          assert(sentinel.count() == 1 && sentinel.filter(col("user_id") =!= -1).isEmpty)
+        }
+      }
+  }
+
+  test("the stager fails loudly when the filesystem loses the mtime order") {
+    // a one-hour mtime tick: of four batches 60 s apart, at least two
+    // adjacent ones land on the same tick
+    val fx = new EventStream.Fixture(spark, sf0001)
+    withTempDir("graft-stager-spec") { dir =>
+      val e = intercept[IllegalArgumentException](
+        Replay.stage(fx.ranged("click")((_, _) => 86400000000L), dir, "SpecStream",
+          (f, ms) => Files.setLastModifiedTime(f, FileTime.fromMillis(ms / 3600000L * 3600000L))))
+      assert(e.getMessage.contains("SpecStream") && e.getMessage.contains("mtime order"),
+        e.getMessage)
+    }
+  }
+
+  test("an empty events file fails a time-range replay naming the stream, not an NPE") {
+    import spark.implicits._
+    withTempDir("graft-empty-events") { dir =>
+      Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .withColumn("ts", col("ts").cast(TimestampNTZType))
+        .coalesce(1).write.parquet(dir.resolve("write").toString)
+      val part = Fs.listDir(dir.resolve("write")).find(_.toString.endsWith(".parquet")).get
+      Files.copy(part, dir.resolve("events.parquet"))
+      val e = intercept[IllegalArgumentException](
+        EventStream.runAnomalyOverFixture(spark, dir.toString))
+      assert(e.getMessage.contains("AnomalyStream"), e.getMessage)
+    }
+  }
+
+  test("a replay that fails inside foreachBatch leaves no temp dir and restores the conf") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def streamDirs(): Set[String] =
+      Fs.listDir(Paths.get(System.getProperty("java.io.tmpdir")))
+        .map(_.getFileName.toString).filter(_.startsWith("graft-stream-")).toSet
+    val dirsBefore = streamDirs()
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val fetches = (1L to 30L).map(i => (i, ts, s"https://a.example.com/p/$i"))
+      .toDF("page_id", "ts", "url")
+    val e = intercept[Exception](FrontierStream.runFrontierOverFixture(spark, fetches,
+      _ => throw new IllegalStateException("onBatch failed")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("onBatch failed")), e)
+    assert((streamDirs() -- dirsBefore).isEmpty, streamDirs() -- dirsBefore)
+    assert(spark.conf.get(key) == before)
   }
 
   test("replays run state-sized shuffle partitions and restore the session conf") {

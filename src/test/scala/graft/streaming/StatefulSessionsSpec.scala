@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.streaming.StatefulSessions.{AnomEvent, AnomState, anomalyCells}
+import graft.streaming.StatefulSessions.{CentsEvent, AnomState, anomalyCells}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StatefulSessionsSpec extends SparkTestBase {
@@ -36,7 +36,7 @@ class StatefulSessionsSpec extends SparkTestBase {
     import org.apache.spark.api.java.Optional
     val dayMs = 86400000L
     def ev(day: Int, cents: Long) =
-      AnomEvent("click", new java.sql.Timestamp(day * dayMs + 3600000L), cents)
+      CentsEvent("click", new java.sql.Timestamp(day * dayMs + 3600000L), cents)
     def mkState(prev: Option[AnomState], wmMs: Long, timedOut: Boolean) =
       TestGroupState.create[AnomState](
         prev.map(Optional.of[AnomState]).getOrElse(Optional.empty()),
